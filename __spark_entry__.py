@@ -1626,8 +1626,9 @@ def q_etcd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                         _json.dumps({"nk": nk, "score": rk * 10}))
 
             def events() -> list[dict]:
+                # each spool file: the 1-byte value flag, then the events
                 return [e for f in sorted(_Path(spool).glob("*.msg"))
-                        for e in _json.loads(f.read_text())]
+                        for e in _json.loads(f.read_text()[1:])]
 
             deadline = _time.monotonic() + 30
             while len(events()) < len(n):
@@ -1657,7 +1658,6 @@ def q_spanner_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition tree over real chunked-JSON streams (incl. a chunkedValue
     split) and spools one message per mod. Seeding is driver-side
     control-plane (25 rows) — bulk data rides parquet/Iceberg."""
-    import json as _json
     import tempfile
     import time as _time
     from pathlib import Path as _Path
@@ -1668,6 +1668,7 @@ def q_spanner_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         child_partitions_value,
         data_change_value,
     )
+    from bento_spark.streaming.spool import read_spool
 
     srv = MiniSpannerServer().start()
     spool = tempfile.mkdtemp(prefix="spanner_spool_")
@@ -1696,15 +1697,14 @@ def q_spanner_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if _time.monotonic() > deadline:
                     raise TimeoutError(f"spanner cdc: {sp.error}")
                 _time.sleep(0.05)
-            rows = [_json.loads(f.read_text())
-                    for f in sorted(_Path(spool).glob("*.msg"))]
         finally:
             sp.stop()
     finally:
         srv.stop()
-    out = spark.createDataFrame(
-        [(e["mod"], e["mod_type"], e["table_name"]) for e in rows],
-        "mod string, mod_type string, table_name string")
+    out = read_spool(spark, spool, SpannerCdcSpooler.META, streaming=False).select(
+        F.col("value").alias("mod"),
+        F.col("gcp_spanner_cdc_mod_type").alias("mod_type"),
+        F.col("gcp_spanner_table_name").alias("table_name"))
     m = F.from_json("mod", "keys struct<nk:int>, "
                            "new_values struct<name:string,score:bigint>")
     return out.select(
@@ -1770,9 +1770,9 @@ def q_s3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bento_spark.streaming.s3 import (
         MiniS3Server,
         S3Spooler,
-        read_s3_spool_batch,
         s3_sink,
     )
+    from bento_spark.streaming.spool import read_spool
 
     srv = MiniS3Server().start()
     try:
@@ -1800,7 +1800,7 @@ def q_s3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise RuntimeError(f"s3 spooler did not finish: {sp.error}")
         finally:
             sp.stop()
-        out = read_s3_spool_batch(spark, spool)
+        out = read_spool(spark, spool, S3Spooler.META, streaming=False)
         rec = F.from_json("value", "nk int, name string, score bigint")
         return out.select(
             "s3_key",
@@ -1825,8 +1825,8 @@ def q_hdfs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         HdfsSpooler,
         MiniWebHdfsServer,
         hdfs_sink,
-        read_hdfs_spool_batch,
     )
+    from bento_spark.streaming.spool import read_spool
 
     srv = MiniWebHdfsServer().start()
     try:
@@ -1850,7 +1850,7 @@ def q_hdfs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             sp.wait_finished(60)
         finally:
             sp.stop()
-        out = read_hdfs_spool_batch(spark, spool)
+        out = read_spool(spark, spool, HdfsSpooler.META, streaming=False)
         rec = F.from_json("value", "nk int, name string, score bigint")
         return out.select(
             "hdfs_path",
@@ -1910,9 +1910,9 @@ def q_jetstream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _time.sleep(0.05)
         finally:
             sp.stop()
-        from bento_spark.streaming.nats import read_jetstream_spool_batch
+        from bento_spark.streaming.spool import read_spool
 
-        out = read_jetstream_spool_batch(spark, spool)
+        out = read_spool(spark, spool, JetStreamSpooler.META, streaming=False)
         rec = F.from_json("value", "nk int, name string, score bigint")
         return out.select(
             "nats_subject",

@@ -78,7 +78,7 @@ def known_inputs() -> frozenset[str]:
     from bento_spark.plans import compiler
 
     src = inspect.getsource(compiler.Pipeline._input)
-    return frozenset(re.findall(r'"(\w+)" in inp', src))
+    return frozenset(re.findall(r'"(\w+)" in inp', src)) | frozenset(compiler._BRIDGES)
 
 
 def _lint_duration(path: str, val, issues: list[str]) -> None:

@@ -56,7 +56,7 @@ def get_spark(
     # equal-or-faster with far lower variance.
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
     driver_mem = (extra_conf or {}).get(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
     )
     gc_opts = f"-XX:+UseParallelGC -Xms{driver_mem}"
 
@@ -114,6 +114,19 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """The default driver heap: min(24g, half of the host's MemTotal), in
+    whole GiB and at least 1g. The heap is pre-sized (-Xms = -Xmx, see
+    get_spark), so a fixed 24g cannot even start a JVM on a smaller host.
+    Without a readable meminfo the 24g scale default stands."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "24g"
+    return f"{max(1, min(24, kib // (2 * 1024 * 1024)))}g"
 
 
 def _parse_local_cores(master: str) -> int | None:

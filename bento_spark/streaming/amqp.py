@@ -18,7 +18,7 @@ Spark-first mapping (same spool-bridge rationale as every push source):
   exactly-once downstream hold. basic.ack fires only AFTER the spool
   file is durably renamed — the broker redelivers anything unacked,
   giving at-least-once into the spool, dedupe-able downstream. The
-  routing key rides the spool FILENAME (hex) and surfaces as an
+  routing key rides the spool file's metadata and surfaces as an
   `amqp_key` column decoded JVM-side — no Python in the hot path.
 - output -> foreachBatch publisher: one pooled connection per partition,
   rows publish as JSON executor-side with an interpolated routing-key
@@ -41,7 +41,8 @@ import struct
 import threading
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import SpoolBridge
 
 FRAME_METHOD, FRAME_HEADER, FRAME_BODY, FRAME_HEARTBEAT = 1, 2, 3, 8
 FRAME_END = 0xCE
@@ -325,10 +326,13 @@ def parse_amqp_url(url: str) -> tuple[str, int, str]:
 
 
 @dataclass
-class AmqpSpooler:
+class AmqpSpooler(SpoolBridge):
     """`amqp_0_9` input (amqp09/input.go): consume -> spool; ack only
-    after the atomic rename, so unspooled deliveries are redelivered
-    (at-least-once into the replayable file source)."""
+    after the spool file is durable, so unspooled deliveries are
+    redelivered (at-least-once into the replayable file source)."""
+
+    connector = "amqp_0_9"
+    META = (("amqp_key", "string"),)
 
     host: str
     port: int
@@ -339,13 +343,9 @@ class AmqpSpooler:
     bindings: list[tuple[str, str]] = field(default_factory=list)  # (exchange, key)
     consumer_tag: str = "bento_spark"
     prefetch_count: int = 64
-    _thread: "threading.Thread | None" = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
     _client: "AmqpClient | None" = field(default=None, repr=False)
 
-    def start(self) -> "AmqpSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
         client = AmqpClient(self.host, self.port, vhost=self.vhost)
         if self.declare:
             client.queue_declare(self.queue)
@@ -355,50 +355,21 @@ class AmqpSpooler:
             client.qos(self.prefetch_count)
         client.consume(self.queue, self.consumer_tag)
         self._client = client
-        seq = {"n": 0}
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.recv_deliver()
-                except (ConnectionError, OSError):
-                    return
-                if got is None:
-                    return
-                delivery_tag, _exchange, key, body = got
-                name = f"{seq['n']:012d}-{key.encode().hex()}-{uuid.uuid4().hex}.msg"
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(body)
-                tmp.rename(spool / name)  # durable BEFORE the ack
-                seq["n"] += 1
-                try:
-                    client.ack(delivery_tag)
-                except (ConnectionError, OSError):
-                    return
+    def poll(self):
+        got = self._client.recv_deliver()
+        if got is None:
+            raise ConnectionError("broker closed the connection")
+        delivery_tag, _exchange, key, body = got
+        yield delivery_tag, body, key
 
-        t = threading.Thread(target=run, daemon=True)
-        t.start()
-        self._thread = t
-        return self
+    def ack(self, tokens: list) -> None:
+        for delivery_tag in tokens:
+            self._client.ack(delivery_tag)
 
-    def stop(self) -> None:
-        self._stop.set()
+    def close(self) -> None:
         if self._client is not None:
             self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_amqp_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over an AmqpSpooler dir: `value string` plus the
-    routing key decoded from the filename JVM-side (`amqp_key`). Shares
-    the redis spool filename contract (streaming/redis.py)."""
-    from bento_spark.streaming.redis import read_redis_spool_stream
-
-    return read_redis_spool_stream(spark, spool_dir, tag_col="amqp_key",
-                                   max_files_per_trigger=max_files_per_trigger)
 
 
 # --------------------------------------------------------------------------

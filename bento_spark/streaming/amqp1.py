@@ -38,7 +38,8 @@ import threading
 import time
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import SpoolBridge
 
 PROTO_AMQP = b"AMQP\x00\x01\x00\x00"
 PROTO_SASL = b"AMQP\x03\x01\x00\x00"
@@ -595,86 +596,42 @@ def parse_amqp1_url(url: str) -> tuple[str, int, str | None, str | None]:
 
 
 @dataclass
-class Amqp1Spooler:
+class Amqp1Spooler(SpoolBridge):
     """`amqp_1` input (amqp1/input.go): receiver link with `credit` link
     credit; each delivery spools as one durable file BEFORE its accepted
     disposition — unsettled deliveries redeliver (at-least-once)."""
+
+    connector = "amqp_1"
+    META = (("amqp_delivery_id", "bigint"),)
 
     url: str
     source_address: str
     spool_dir: str
     credit: int = 64
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
+    _client: "Amqp1Client | None" = field(default=None, repr=False)
+    _handle: int = field(default=0, repr=False)
 
-    def start(self) -> "Amqp1Spooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
         host, port, user, pwd = parse_amqp1_url(self.url)
-        client = Amqp1Client(host, port, username=user, password=pwd)
-        handle = client.attach_receiver(self.source_address, credit=self.credit)
-        seq = {"n": 0}
+        self._client = Amqp1Client(host, port, username=user, password=pwd)
+        self._handle = self._client.attach_receiver(self.source_address, credit=self.credit)
 
-        def run() -> None:
-            import sys
+    def poll(self):
+        for did, payload in self._client.receive(wait_s=0.2):
+            body = decode_message_body(payload)
+            raw = (body if isinstance(body, (bytes, bytearray))
+                   else str(body if body is not None else "").encode("utf-8"))
+            yield did, raw, did
 
-            try:
-                while not self._stop.is_set():
-                    msgs = client.receive(wait_s=0.2)
-                    if not msgs:
-                        continue
-                    done = []
-                    for did, payload in msgs:
-                        body = decode_message_body(payload)
-                        raw = (body if isinstance(body, (bytes, bytearray))
-                               else str(body if body is not None else "").encode("utf-8"))
-                        seq["n"] += 1
-                        name = f"{seq['n']:012d}-{did:012d}-{uuid.uuid4().hex}.msg"
-                        tmp = spool / f".{name}.tmp"
-                        # 1-byte pad: 0-byte files emit no row (kafka_wire)
-                        tmp.write_bytes(b"." + raw)
-                        tmp.rename(spool / name)
-                        done.append(did)
-                    client.settle(done)  # ack AFTER durability
-                    # top up credit so the broker keeps delivering
-                    write_frame(client.sock, performative(D_FLOW, [
-                        0, 1 << 11, 0, 1 << 11, handle, 0, self.credit]))
-            except (ConnectionError, OSError, ValueError) as e:
-                if not self._stop.is_set():
-                    self.error = f"amqp_1: {e}"
-                    print(self.error, file=sys.stderr)
-            finally:
-                client.close()
+    def ack(self, tokens: list) -> None:
+        self._client.settle(tokens)
+        # top up credit so the broker keeps delivering
+        write_frame(self._client.sock, performative(D_FLOW, [
+            0, 1 << 11, 0, 1 << 11, self._handle, 0, self.credit]))
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_amqp1_stream(spark, spool_dir: str,
-                      max_files_per_trigger: int | None = None):
-    """File stream over an Amqp1Spooler's dir: `value string` plus the
-    delivery id decoded from the filename JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-(\d{12})-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("value", F.expr("substring(value, 2)"))
-          .withColumn("amqp_delivery_id",
-                      F.regexp_extract(fname, pat, 1).cast("bigint"))
-    )
+    def close(self) -> None:
+        if self._client is not None:
+            self._client.close()
 
 
 # --------------------------------------------------------------------------

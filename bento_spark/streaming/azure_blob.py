@@ -16,7 +16,7 @@ signer is validated end-to-end, not assumed. Against real Azure, point
 Spark-first mapping (identical topology to streaming/s3.py):
 - input  -> AzureBlobSpooler makes ONE pass over the container listing
   (the reference consumes the listing then stops) spooling each blob as
-  a durable file; blob name/container ride the FILENAME and surface as
+  a durable file; blob name/container ride as metadata and surface as
   columns JVM-side.
 - output -> one Put Blob per row, the interpolated blob path arriving as
   a pre-computed COLUMN, body rendered JVM-side.
@@ -31,9 +31,9 @@ import hmac
 import threading
 import time
 import urllib.parse
-import uuid
-from dataclasses import dataclass, field
-from pathlib import Path
+from dataclasses import dataclass
+
+from bento_spark.streaming.spool import SpoolBridge
 
 _API_VERSION = "2021-08-06"
 
@@ -221,11 +221,16 @@ def _xml_unescape(s: str) -> str:
 
 
 @dataclass
-class AzureBlobSpooler:
+class AzureBlobSpooler(SpoolBridge):
     """`azure_blob_storage` input (input_blob_storage.go): one pass over
     the container listing, each blob spooled as one durable file;
     `finished` flips True when the listing is consumed (the reference's
-    consume-then-stop contract)."""
+    consume-then-stop contract). `delete_blobs` deletes a blob only
+    after its spool file is durable."""
+
+    connector = "azure_blob_storage"
+    finite = True
+    META = (("blob_storage_container", "string"), ("blob_storage_key", "string"))
 
     endpoint: str
     account: str
@@ -234,80 +239,24 @@ class AzureBlobSpooler:
     spool_dir: str
     prefix: str = ""
     delete_blobs: bool = False
-    finished: bool = field(default=False, repr=False)
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "AzureBlobSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        client = AzureBlobClient(self.endpoint, self.account, self.account_key)
-        seq = {"n": 0}
+    def connect(self) -> None:
+        self._client = AzureBlobClient(self.endpoint, self.account, self.account_key)
 
-        def run() -> None:
-            import sys
+    def poll(self):
+        self.finish()
+        for name in self._client.list_blobs(self.container, prefix=self.prefix):
+            if self.stopping:
+                return
+            body, _ = self._client.get_blob(self.container, name)
+            yield name, body, self.container, name
 
+    def ack(self, tokens: list) -> None:
+        for name in tokens if self.delete_blobs else ():
             try:
-                for name in client.list_blobs(self.container, prefix=self.prefix):
-                    if self._stop.is_set():
-                        return
-                    body, _ = client.get_blob(self.container, name)
-                    seq["n"] += 1
-                    fname = (f"{seq['n']:012d}-{self.container.encode().hex()}"
-                             f"-{name.encode().hex()}-{uuid.uuid4().hex}.msg")
-                    tmp = spool / f".{fname}.tmp"
-                    # 1-byte pad: 0-byte files emit no row (see kafka_wire)
-                    tmp.write_bytes(b"." + body)
-                    tmp.rename(spool / fname)
-                    if self.delete_blobs:
-                        try:
-                            client.delete_blob(self.container, name)
-                        except (ConnectionError, OSError):
-                            pass  # re-lists on the next run
-            except Exception as e:
-                self.error = f"azure_blob_storage: {e}"
-                print(self.error, file=sys.stderr)
-            finally:
-                self.finished = True
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        deadline = time.monotonic() + timeout
-        while time.monotonic() < deadline and not self.finished:
-            time.sleep(0.02)
-        return self.finished
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_azure_blob_stream(spark, spool_dir: str,
-                           max_files_per_trigger: int | None = None):
-    """File stream over an AzureBlobSpooler's dir: `value string` +
-    blob_storage_key / blob_storage_container decoded from the filename
-    (the reference's metadata surface)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-([0-9a-f]*)-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("value", F.expr("substring(value, 2)"))
-          .withColumn("blob_storage_container",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("blob_storage_key",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 2)), "UTF-8"))
-    )
+                self._client.delete_blob(self.container, name)
+            except (ConnectionError, OSError):
+                pass  # re-lists on the next run
 
 
 # --------------------------------------------------------------------------

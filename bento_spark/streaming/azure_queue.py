@@ -24,8 +24,7 @@ import threading
 import time
 import urllib.parse
 import uuid
-from dataclasses import dataclass, field
-from pathlib import Path
+from dataclasses import dataclass
 
 from bento_spark.streaming.azure_blob import (
     _xml_escape,
@@ -33,6 +32,7 @@ from bento_spark.streaming.azure_blob import (
     shared_key_signature,
     shared_key_string_to_sign,
 )
+from bento_spark.streaming.spool import SpoolBridge
 
 _API_VERSION = "2021-08-06"
 
@@ -150,10 +150,13 @@ class AzureQueueClient:
 
 
 @dataclass
-class AzureQueueSpooler:
+class AzureQueueSpooler(SpoolBridge):
     """`azure_queue_storage` input (input_queue_storage.go): poll Get
-    Messages; Delete Message (pop receipt) fires only AFTER the atomic
-    spool rename — at-least-once via the visibility timeout."""
+    Messages; Delete Message (pop receipt) fires only AFTER the spool
+    file is durable — at-least-once via the visibility timeout."""
+
+    connector = "azure_queue_storage"
+    META = (("queue_storage_message_id", "string"),)
 
     endpoint: str
     account: str
@@ -162,78 +165,26 @@ class AzureQueueSpooler:
     spool_dir: str
     max_messages: int = 16
     visibility_timeout_s: int = 30
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "AzureQueueSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        client = AzureQueueClient(self.endpoint, self.account, self.account_key)
-        seq = {"n": 0}
+    def connect(self) -> None:
+        self._client = AzureQueueClient(self.endpoint, self.account, self.account_key)
 
-        def run() -> None:
-            import sys
+    def poll(self):
+        msgs = self.request(self._client.get_messages, self.queue, num=self.max_messages,
+                            visibility_timeout_s=self.visibility_timeout_s)
+        if msgs is None:
+            return
+        if not msgs:
+            self.idle(0.05)
+        for m in msgs:
+            yield (m["id"], m["pop_receipt"]), m["text"], m["id"]
 
-            while not self._stop.is_set():
-                try:
-                    msgs = client.get_messages(
-                        self.queue, num=self.max_messages,
-                        visibility_timeout_s=self.visibility_timeout_s)
-                except (ConnectionError, OSError):
-                    if self._stop.wait(0.5):
-                        return
-                    continue
-                if not msgs:
-                    self._stop.wait(0.05)
-                    continue
-                try:
-                    for m in msgs:
-                        seq["n"] += 1
-                        name = (f"{seq['n']:012d}-{m['id'].encode().hex()}"
-                                f"-{uuid.uuid4().hex}.msg")
-                        tmp = spool / f".{name}.tmp"
-                        # 1-byte pad: 0-byte files emit no row (kafka_wire)
-                        tmp.write_bytes(b"." + m["text"].encode("utf-8"))
-                        tmp.rename(spool / name)
-                        try:
-                            client.delete_message(self.queue, m["id"],
-                                                  m["pop_receipt"])
-                        except (ConnectionError, OSError):
-                            pass  # visibility timeout re-delivers
-                except Exception as e:
-                    self.error = f"azure_queue_storage: {e}"
-                    print(self.error, file=sys.stderr)
-                    return
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_azure_queue_stream(spark, spool_dir: str,
-                            max_files_per_trigger: int | None = None):
-    """File stream over an AzureQueueSpooler's dir: `value string` +
-    queue_storage_message_id decoded from the filename JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("value", F.expr("substring(value, 2)"))
-          .withColumn("queue_storage_message_id",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-    )
+    def ack(self, tokens: list) -> None:
+        for message_id, pop_receipt in tokens:
+            try:
+                self._client.delete_message(self.queue, message_id, pop_receipt)
+            except ConnectionError:
+                pass  # the visibility timeout re-delivers
 
 
 # --------------------------------------------------------------------------

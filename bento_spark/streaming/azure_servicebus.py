@@ -16,7 +16,7 @@ in-process broker RECOMPUTES every SAS signature.
 
 Spark-first mapping (same spool bridge as input.amqp_1):
 - ServiceBusSpooler: CBS put-token, then a receiver link on the queue;
-  each delivery spools as a JSON envelope BEFORE its accepted
+  each delivery spools as one durable file BEFORE its accepted
   disposition (at-least-once — unsettled deliveries redeliver).
   `nack_reject_patterns` matching bodies get a REJECTED disposition and
   never spool (the reference nacks them to the dead-letter queue).
@@ -24,8 +24,8 @@ Spark-first mapping (same spool bridge as input.amqp_1):
   immediately after the durable rename, so there is no long-held lock
   to renew.
 - Metadata (service_bus_message_id / sequence_number / enqueued_time /
-  delivery_count / content_type / correlation_id) parses JVM-side from
-  the envelope.
+  delivery_count / content_type / correlation_id) rides the spool file
+  name and decodes JVM-side (streaming/spool.py).
 """
 
 from __future__ import annotations
@@ -33,14 +33,11 @@ from __future__ import annotations
 import base64
 import hashlib
 import hmac
-import json
 import re
-import threading
 import time
 import urllib.parse
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from bento_spark.streaming.amqp1 import (
     Amqp1Client,
@@ -52,6 +49,7 @@ from bento_spark.streaming.amqp1 import (
     enc_value,
     performative,
 )
+from bento_spark.streaming.spool import SpoolBridge
 
 # message-section descriptors (OASIS AMQP 1.0 §3.2)
 S_HEADER, S_DELIVERY_ANN, S_MESSAGE_ANN = 0x70, 0x71, 0x72
@@ -206,10 +204,20 @@ def cbs_put_token(client: Amqp1Client, audience: str, token: str,
 
 
 @dataclass
-class ServiceBusSpooler:
+class ServiceBusSpooler(SpoolBridge):
     """`azure_service_bus_queue` input: CBS-authenticated receiver link,
     spool-then-settle (at-least-once), reject-disposition for
     nack_reject_patterns matches."""
+
+    connector = "azure_service_bus_queue"
+    META = (
+        ("service_bus_message_id", "string"),
+        ("service_bus_sequence_number", "bigint"),
+        ("service_bus_enqueued_time", "bigint"),
+        ("service_bus_delivery_count", "int"),
+        ("service_bus_content_type", "string"),
+        ("service_bus_correlation_id", "string"),
+    )
 
     host: str
     port: int
@@ -220,108 +228,50 @@ class ServiceBusSpooler:
     nack_reject_patterns: list[str] = field(default_factory=list)
     token_ttl_s: int = 3600
     _client: Amqp1Client | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "ServiceBusSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
         client = Amqp1Client(self.host, self.port)
         audience = f"sb://{self.host}/{self.queue}"
         token = generate_sas_token(audience, self.key_name, self.key,
                                    int(time.time()) + self.token_ttl_s)
         cbs_put_token(client, audience, token)
-        handle = client.attach_receiver(self.queue, credit=256)
+        client.attach_receiver(self.queue, credit=256)
         self._client = client
-        rejects = [re.compile(p) for p in self.nack_reject_patterns]
-        seq = {"n": 0}
+        self._rejects = [re.compile(p) for p in self.nack_reject_patterns]
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.receive(max_messages=64, wait_s=0.5)
-                except (ConnectionError, OSError, ValueError):
-                    return
-                for did, payload in got:
-                    sections = decode_sections(payload)
-                    body = sections["body"]
-                    text = (body.decode("utf-8", "replace")
-                            if isinstance(body, (bytes, bytearray))
-                            else "" if body is None else str(body))
-                    if any(rx.search(text) for rx in rejects):
-                        # dead-letter path: rejected disposition, no spool
-                        from bento_spark.streaming.amqp1 import write_frame
+    def poll(self):
+        from bento_spark.streaming.amqp1 import write_frame
 
-                        write_frame(client.sock, performative(
-                            D_DISPOSITION,
-                            [True, did, did, True, Described(D_REJECTED, [])]))
-                        continue
-                    props = sections["properties"] + [None] * 8
-                    ann = sections["message_annotations"]
-                    hdr = sections["header"] + [None] * 5
-                    env = {
-                        "value": text,
-                        "message_id": (str(props[0])
-                                       if props[0] is not None else None),
-                        "correlation_id": (str(props[5])
-                                           if props[5] is not None else None),
-                        "content_type": (str(props[6])
-                                         if props[6] is not None else None),
-                        "sequence_number": ann.get(ANN_SEQUENCE),
-                        "enqueued_time_ms": ann.get(ANN_ENQUEUED),
-                        "delivery_count": hdr[4] if hdr[4] is not None else 0,
-                    }
-                    seq["n"] += 1
-                    name = f"{seq['n']:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(json.dumps(env))
-                    tmp.rename(spool / name)
-                    # durable BEFORE the accepted disposition
-                    try:
-                        client.settle([did])
-                    except (ConnectionError, OSError):
-                        return
-            _ = handle
+        def opt(v):
+            return str(v) if v is not None else None
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+        for did, payload in self._client.receive(max_messages=64, wait_s=0.5):
+            sections = decode_sections(payload)
+            body = sections["body"]
+            text = (body.decode("utf-8", "replace")
+                    if isinstance(body, (bytes, bytearray))
+                    else "" if body is None else str(body))
+            if any(rx.search(text) for rx in self._rejects):
+                # dead-letter path: rejected disposition, no spool
+                write_frame(self._client.sock, performative(
+                    D_DISPOSITION,
+                    [True, did, did, True, Described(D_REJECTED, [])]))
+                continue
+            props = sections["properties"] + [None] * 8
+            ann = sections["message_annotations"]
+            hdr = sections["header"] + [None] * 5
+            enqueued_ms = ann.get(ANN_ENQUEUED)
+            yield (did, text, opt(props[0]), ann.get(ANN_SEQUENCE),
+                   None if enqueued_ms is None else enqueued_ms // 1000,
+                   hdr[4] if hdr[4] is not None else 0,
+                   opt(props[6]), opt(props[5]))
 
-    def stop(self) -> None:
-        self._stop.set()
+    def ack(self, tokens: list) -> None:
+        self._client.settle(tokens)
+
+    def close(self) -> None:
         if self._client is not None:
             self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_service_bus_stream(spark, spool_dir: str,
-                            max_files_per_trigger: int | None = None):
-    """File stream over a ServiceBusSpooler's dir: JSON envelopes ->
-    `value` + the reference's service_bus_* metadata columns
-    (input_service_bus_queue.go:112-120), parsed JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    env = F.from_json(F.col("value"), (
-        "value STRING, message_id STRING, correlation_id STRING, "
-        "content_type STRING, sequence_number BIGINT, "
-        "enqueued_time_ms BIGINT, delivery_count INT"))
-    return df.select(
-        env["value"].alias("value"),
-        env["message_id"].alias("service_bus_message_id"),
-        env["sequence_number"].alias("service_bus_sequence_number"),
-        (env["enqueued_time_ms"] / F.lit(1000)).cast("bigint")
-            .alias("service_bus_enqueued_time"),
-        env["delivery_count"].alias("service_bus_delivery_count"),
-        env["content_type"].alias("service_bus_content_type"),
-        env["correlation_id"].alias("service_bus_correlation_id"),
-    )
 
 
 # ---------------------------------------------------------------------------

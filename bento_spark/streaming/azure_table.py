@@ -40,9 +40,9 @@ import re
 import threading
 import time
 import urllib.parse
-import uuid
-from dataclasses import dataclass, field
-from pathlib import Path
+from dataclasses import dataclass
+
+from bento_spark.streaming.spool import SpoolBridge
 
 _API_VERSION = "2019-02-02"
 _ODATA_HDRS = {
@@ -245,11 +245,15 @@ class AzureTableClient:
 
 
 @dataclass
-class AzureTableSpooler:
+class AzureTableSpooler(SpoolBridge):
     """`azure_table_storage` input: one pass over the entity query
     (filter/select/page_size — input_table_storage.go's pager), one spool
-    file per entity. `wait_finished()` mirrors the blob spooler — the
-    reference consumes the listing then stops."""
+    file per entity (compact JSON). `wait_finished()` mirrors the blob
+    spooler — the reference consumes the listing then stops."""
+
+    connector = "azure_table_storage"
+    finite = True
+    META = (("table_storage_name", "string"), ("row_num", "bigint"))
 
     endpoint: str
     account: str
@@ -259,70 +263,17 @@ class AzureTableSpooler:
     filter: str = ""
     select: str = ""
     page_size: int = 1000
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _done: threading.Event = field(default_factory=threading.Event, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
 
-    def start(self) -> "AzureTableSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        client = AzureTableClient(self.endpoint, self.account, self.account_key)
+    def connect(self) -> None:
+        self._client = AzureTableClient(self.endpoint, self.account, self.account_key)
 
-        def run() -> None:
-            try:
-                n = 0
-                for entity in client.query(self.table, self.filter,
-                                           self.select, self.page_size):
-                    if self._stop.is_set():
-                        return
-                    n += 1
-                    env = {"entity": entity, "table": self.table, "row_num": n}
-                    name = f"{n:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(json.dumps(env))
-                    tmp.rename(spool / name)
-            except Exception as e:  # surfaced via wait_finished/error
-                self.error = e
-            finally:
-                self._done.set()
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        ok = self._done.wait(timeout)
-        if self.error is not None:
-            raise self.error
-        return ok
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_azure_table_stream(spark, spool_dir: str,
-                            max_files_per_trigger: int | None = None):
-    """File stream over an AzureTableSpooler's dir: the entity JSON is the
-    row `value`; `table_storage_name` / `row_num` are the reference's
-    metadata columns (input_table_storage.go:162-163) — all parsed
-    JVM-side with from_json/get_json_object."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    env = F.from_json(F.col("value"),
-                      "table STRING, row_num BIGINT")
-    return df.select(
-        F.get_json_object(F.col("value"), "$.entity").alias("value"),
-        env["table"].alias("table_storage_name"),
-        env["row_num"].alias("row_num"),
-    )
+    def poll(self):
+        self.finish()
+        entities = self._client.query(self.table, self.filter, self.select, self.page_size)
+        for n, entity in enumerate(entities, 1):
+            if self.stopping:
+                return
+            yield None, json.dumps(entity, separators=(",", ":")), self.table, n
 
 
 # ---------------------------------------------------------------------------

@@ -26,10 +26,10 @@ from __future__ import annotations
 
 import threading
 import time
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
 import socket
+
+from bento_spark.streaming.spool import SpoolBridge
 
 _CRLF = b"\r\n"
 
@@ -118,74 +118,37 @@ def parse_beanstalkd_addr(addr: str) -> tuple[str, int]:
 
 
 @dataclass
-class BeanstalkdSpooler:
+class BeanstalkdSpooler(SpoolBridge):
     """`beanstalkd` input (input.go): reserve-poll the default tube and
     spool each job as one durable file; `delete` fires only AFTER the
-    atomic rename — at-least-once (an un-deleted job re-delivers after
+    file is durable — at-least-once (an un-deleted job re-delivers after
     TTR)."""
+
+    connector = "beanstalkd"
+    META = (("beanstalkd_id", "bigint"),)
 
     host: str
     port: int
     spool_dir: str
     poll_timeout_s: float = 0.2
     _client: BeanstalkdClient | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "BeanstalkdSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        client = BeanstalkdClient(self.host, self.port)
-        self._client = client
-        seq = {"n": 0}
+    def connect(self) -> None:
+        self._client = BeanstalkdClient(self.host, self.port)
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.reserve(self.poll_timeout_s)
-                except (ConnectionError, OSError, ValueError):
-                    return  # socket closed by stop() or server gone
-                if got is None:
-                    continue
-                job_id, body = got
-                seq["n"] += 1
-                name = (f"{seq['n']:012d}-{job_id:012d}-{uuid.uuid4().hex}.msg")
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(body)
-                tmp.rename(spool / name)
-                try:
-                    client.delete(job_id)  # ack AFTER durability
-                except (ConnectionError, OSError):
-                    return
+    def poll(self):
+        got = self._client.reserve(self.poll_timeout_s)
+        if got is not None:
+            job_id, body = got
+            yield job_id, body, job_id
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    def ack(self, tokens: list) -> None:
+        for job_id in tokens:
+            self._client.delete(job_id)
 
-    def stop(self) -> None:
-        self._stop.set()
+    def close(self) -> None:
         if self._client is not None:
             self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_beanstalkd_stream(spark, spool_dir: str,
-                           max_files_per_trigger: int | None = None):
-    """File stream over a BeanstalkdSpooler's dir: `value string` +
-    `beanstalkd_id` decoded from the filename JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-(\d{12})-[0-9a-f]{32}\.msg$"
-    return df.withColumn(
-        "beanstalkd_id", F.regexp_extract(fname, pat, 1).cast("bigint"))
 
 
 # --------------------------------------------------------------------------

@@ -41,10 +41,10 @@ import json
 import threading
 import urllib.parse
 import uuid
-from dataclasses import dataclass, field
-from pathlib import Path
+from dataclasses import dataclass
 
 from bento_spark.streaming.gcs import GcsClient
+from bento_spark.streaming.spool import SpoolBridge
 
 FORMATS = ("NEWLINE_DELIMITED_JSON", "CSV")
 
@@ -163,10 +163,13 @@ def build_select(table: str, columns: list[str], where: str = "",
 
 
 @dataclass
-class BigQuerySpooler:
+class BigQuerySpooler(SpoolBridge):
     """`gcp_bigquery_select` input: one paged query, one spool file per
     row (the row's JSON object — the reference emits one message per
     row). `wait_finished()` mirrors the other one-pass pullers."""
+
+    connector = "gcp_bigquery_select"
+    finite = True
 
     endpoint: str
     project: str
@@ -178,59 +181,17 @@ class BigQuerySpooler:
     prefix: str = ""
     suffix: str = ""
     credentials: dict | None = None
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _done: threading.Event = field(default_factory=threading.Event, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
 
-    def start(self) -> "BigQuerySpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        client = BigQueryClient(self.endpoint, self.credentials)
-        sql = build_select(self.table, self.columns, self.where,
-                           self.prefix, self.suffix)
+    def connect(self) -> None:
+        self._client = BigQueryClient(self.endpoint, self.credentials)
 
-        def run() -> None:
-            try:
-                n = 0
-                for row in client.query(self.project, sql, self.args):
-                    if self._stop.is_set():
-                        return
-                    n += 1
-                    name = f"{n:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(json.dumps(row))
-                    tmp.rename(spool / name)
-            except Exception as e:
-                self.error = e
-            finally:
-                self._done.set()
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        ok = self._done.wait(timeout)
-        if self.error is not None:
-            raise self.error
-        return ok
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
-
-
-def read_bigquery_stream(spark, spool_dir: str,
-                         max_files_per_trigger: int | None = None):
-    """File stream over a BigQuerySpooler's dir: each row's JSON object
-    is the message `value` (reference: one message per row)."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
+    def poll(self):
+        self.finish()
+        sql = build_select(self.table, self.columns, self.where, self.prefix, self.suffix)
+        for row in self._client.query(self.project, sql, self.args):
+            if self.stopping:
+                return
+            yield None, json.dumps(row)
 
 
 # ---------------------------------------------------------------------------

@@ -47,9 +47,10 @@ import socket
 import struct
 import threading
 import urllib.parse
-import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
+
+from bento_spark.streaming.spool import SpoolBridge
 
 PROTOCOL_3_0 = 196608  # 3 << 16
 
@@ -394,22 +395,22 @@ def build_changefeed_statement(tables: list[str], options: list[str],
 
 
 @dataclass
-class ChangefeedSpooler:
+class ChangefeedSpooler(SpoolBridge):
     """`cockroachdb_changefeed` input: stream the core changefeed over
     one driver-side pgwire connection, one spool file per row, message =
     the reference's {"primary_key","row","table"} JSON (keys sorted like
     Go's json.Marshal). When cursor_cache=True, the row's `updated`
     timestamp is persisted to `<spool>/.cursor` AFTER the covering spool
-    file is durable, and the next start() resumes WITH CURSOR=<ts>."""
+    file is durable (the ack), and the next start() resumes WITH
+    CURSOR=<ts>."""
+
+    connector = "cockroachdb_changefeed"
 
     dsn: str
     tables: list[str]
     spool_dir: str
     options: list[str] = field(default_factory=list)
     cursor_cache: bool = False
-    error: str | None = None
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
     _client: PgWireClient | None = field(default=None, repr=False)
 
     @property
@@ -422,77 +423,42 @@ class ChangefeedSpooler:
         return build_changefeed_statement(self.tables, self.options, cursor,
                                           self.cursor_cache)
 
-    def start(self) -> "ChangefeedSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
         stmt = self.statement  # resolves the cached cursor BEFORE connect
         self._client = PgWireClient(self.dsn)
         # the changefeed blocks indefinitely between rows; the connect/auth
         # timeout must not tear down an idle feed
         self._client.sock.settimeout(None)
-        counter = {"n": 0}
+        self._rows = self._client.query_stream(stmt)
 
-        def run() -> None:
-            import sys
+    def poll(self):
+        row = next(self._rows, None)
+        if row is None:
+            self.finish()
+            return
+        table, key, val = (c if isinstance(c, str) else (c or b"").decode("utf-8")
+                           for c in row[:3])
+        msg = json.dumps({"primary_key": key, "row": val, "table": table}, sort_keys=True)
+        yield val, msg
 
-            client = self._client
-            try:
-                for row in client.query_stream(stmt):
-                    if self._stop.is_set():
-                        return
-                    table = row[0] if isinstance(row[0], str) else (
-                        row[0] or b"").decode("utf-8")
-                    key = row[1] if isinstance(row[1], str) else (
-                        row[1] or b"").decode("utf-8")
-                    val = row[2] if isinstance(row[2], str) else (
-                        row[2] or b"").decode("utf-8")
-                    msg = json.dumps({"primary_key": key, "row": val,
-                                      "table": table}, sort_keys=True)
-                    counter["n"] += 1
-                    name = f"{counter['n']:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(msg)
-                    tmp.rename(spool / name)
-                    if self.cursor_cache:
-                        try:
-                            ts = json.loads(val).get("updated")
-                        except (json.JSONDecodeError, AttributeError):
-                            ts = None
-                        if ts:
-                            ctmp = spool / ".cursor.tmp"
-                            ctmp.write_text(str(ts))
-                            ctmp.rename(spool / ".cursor")
-            except (ConnectionError, OSError) as e:
-                if not self._stop.is_set():
-                    self.error = f"cockroachdb_changefeed: {e}"
-                    print(self.error, file=sys.stderr)
-            finally:
-                client.close()
+    def ack(self, tokens: list) -> None:
+        if not self.cursor_cache:
+            return
+        try:
+            ts = json.loads(tokens[-1]).get("updated")
+        except (json.JSONDecodeError, AttributeError):
+            ts = None
+        if ts:
+            ctmp = Path(self.spool_dir) / ".cursor.tmp"
+            ctmp.write_text(str(ts))
+            ctmp.rename(Path(self.spool_dir) / ".cursor")
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
+    def close(self) -> None:
         if self._client is not None:
             try:
                 self._client.sock.close()  # unblocks the reader
             except OSError:
                 pass
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
-
-
-def read_changefeed_stream(spark, spool_dir: str,
-                           max_files_per_trigger: int | None = None):
-    """File stream over a ChangefeedSpooler's dir: each changefeed row's
-    JSON object is the message `value`."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
 
 
 # ---------------------------------------------------------------------------

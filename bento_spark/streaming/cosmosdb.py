@@ -55,8 +55,9 @@ import threading
 import time
 import urllib.parse
 import uuid
-from dataclasses import dataclass, field
-from pathlib import Path
+from dataclasses import dataclass
+
+from bento_spark.streaming.spool import SpoolBridge
 
 _API_VERSION = "2018-12-31"
 
@@ -282,10 +283,16 @@ def parse_pk_mapping(src: str):
 
 
 @dataclass
-class CosmosSpooler:
+class CosmosSpooler(SpoolBridge):
     """`azure_cosmosdb` input: one pass over a parametrized SQL query
     against (database, container, partition key), one spool file per
-    item. `wait_finished()` mirrors the other one-pass pullers."""
+    item (compact JSON). `wait_finished()` mirrors the other one-pass
+    pullers."""
+
+    connector = "azure_cosmosdb"
+    finite = True
+    META = (("cosmosdb_database", "string"), ("cosmosdb_container", "string"),
+            ("row_num", "bigint"))
 
     endpoint: str
     account_key: str
@@ -296,73 +303,19 @@ class CosmosSpooler:
     spool_dir: str
     parameters: list[dict] | None = None
     page_size: int = 100
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _done: threading.Event = field(default_factory=threading.Event, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
 
-    def start(self) -> "CosmosSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        client = CosmosClient(self.endpoint, self.account_key)
+    def connect(self) -> None:
+        self._client = CosmosClient(self.endpoint, self.account_key)
 
-        def run() -> None:
-            try:
-                n = 0
-                for item in client.query(self.database, self.container,
-                                         self.partition_key, self.query,
-                                         self.parameters, self.page_size):
-                    if self._stop.is_set():
-                        return
-                    n += 1
-                    env = {"item": item, "database": self.database,
-                           "container": self.container, "row_num": n}
-                    name = f"{n:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(json.dumps(env))
-                    tmp.rename(spool / name)
-            except Exception as e:
-                self.error = e
-            finally:
-                self._done.set()
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        ok = self._done.wait(timeout)
-        if self.error is not None:
-            raise self.error
-        return ok
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_cosmos_stream(spark, spool_dir: str,
-                       max_files_per_trigger: int | None = None):
-    """File stream over a CosmosSpooler's dir: the item JSON is the row
-    `value` plus cosmosdb_database / cosmosdb_container / row_num columns,
-    parsed JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    env = F.from_json(
-        F.col("value"),
-        "database STRING, container STRING, row_num BIGINT")
-    return df.select(
-        F.get_json_object(F.col("value"), "$.item").alias("value"),
-        env["database"].alias("cosmosdb_database"),
-        env["container"].alias("cosmosdb_container"),
-        env["row_num"].alias("row_num"),
-    )
+    def poll(self):
+        self.finish()
+        items = self._client.query(self.database, self.container, self.partition_key,
+                                   self.query, self.parameters, self.page_size)
+        for n, item in enumerate(items, 1):
+            if self.stopping:
+                return
+            yield (None, json.dumps(item, separators=(",", ":")),
+                   self.database, self.container, n)
 
 
 # ---------------------------------------------------------------------------

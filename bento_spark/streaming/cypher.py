@@ -31,9 +31,9 @@ import socket
 import struct
 import threading
 import urllib.parse
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import SpoolBridge
 
 BOLT_MAGIC = b"\x60\x60\xb0\x17"
 # propose 4.4 only — single-suite negotiation like the SSH transport
@@ -335,11 +335,14 @@ class BoltClient:
 
 
 @dataclass
-class CypherSpooler:
+class CypherSpooler(SpoolBridge):
     """`cypher` input (input_cypher.go): run the query once, one spool
     file per record (a JSON object keyed by the result's field names),
     then finish — the reference input shuts down when records are
     exhausted."""
+
+    connector = "cypher"
+    finite = True
 
     uri: str
     query: str
@@ -347,57 +350,20 @@ class CypherSpooler:
     database: str = ""
     user: str | None = None
     password: str | None = None
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _done: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
+    _client: BoltClient | None = field(default=None, repr=False)
 
-    def start(self) -> "CypherSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
+        self._client = BoltClient(self.uri, user=self.user, password=self.password)
 
-        def run() -> None:
-            client = None
-            try:
-                client = BoltClient(self.uri, user=self.user,
-                                    password=self.password)
-                fields, rows = client.run(self.query, database=self.database)
-                for n, row in enumerate(rows, start=1):
-                    obj = dict(zip(fields, row))
-                    name = f"{n:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(json.dumps(obj, default=str))
-                    tmp.rename(spool / name)
-            except Exception as e:
-                self.error = e
-            finally:
-                if client is not None:
-                    client.close()
-                self._done.set()
+    def poll(self):
+        self.finish()
+        fields, rows = self._client.run(self.query, database=self.database)
+        for row in rows:
+            yield None, json.dumps(dict(zip(fields, row)), default=str)
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        ok = self._done.wait(timeout)
-        if self.error is not None:
-            raise self.error
-        return ok
-
-    def stop(self) -> None:
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
-
-
-def read_cypher_stream(spark, spool_dir: str,
-                       max_files_per_trigger: int | None = None):
-    """File stream over a CypherSpooler's dir: each record's JSON object
-    is the message `value` (reference: one message per record)."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
+    def close(self) -> None:
+        if self._client is not None:
+            self._client.close()
 
 
 # ---------------------------------------------------------------------------

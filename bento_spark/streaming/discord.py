@@ -27,9 +27,9 @@ import json
 import threading
 import time
 import urllib.parse
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import SpoolBridge
 
 _API_BASE = "/api/v10"
 
@@ -116,10 +116,13 @@ class DiscordClient:
 
 
 @dataclass
-class DiscordSpooler:
+class DiscordSpooler(SpoolBridge):
     """`discord` input: poll the channel's backlog ascending from the
     last spooled snowflake (input.go's `after` cursor), one spool file
-    per message (the API JSON object)."""
+    per message (the API JSON object). The cursor advances only once the
+    page is durable."""
+
+    connector = "discord"
 
     endpoint: str
     channel_id: str
@@ -127,64 +130,23 @@ class DiscordSpooler:
     spool_dir: str
     poll_period_s: float = 1.0
     limit: int = 100
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
+    _after: str | None = field(default=None, repr=False)
 
-    def start(self) -> "DiscordSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        client = DiscordClient(self.endpoint, self.bot_token)
-        state = {"after": None, "n": 0}
+    def connect(self) -> None:
+        self._client = DiscordClient(self.endpoint, self.bot_token)
 
-        def one_poll() -> None:
-            while True:
-                msgs = client.channel_messages(
-                    self.channel_id, limit=self.limit, after=state["after"])
-                # the API returns newest-first; ascending spool order
-                msgs.sort(key=lambda m: int(m.get("id", 0)))
-                if not msgs:
-                    return
-                for m in msgs:
-                    state["n"] += 1
-                    name = f"{state['n']:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_text(json.dumps(m))
-                    tmp.rename(spool / name)
-                    state["after"] = str(m.get("id"))
-                if len(msgs) < self.limit:
-                    return
+    def poll(self):
+        msgs = self._client.channel_messages(self.channel_id, limit=self.limit,
+                                             after=self._after)
+        # the API returns newest-first; ascending spool order
+        msgs.sort(key=lambda m: int(m.get("id", 0)))
+        for m in msgs:
+            yield str(m.get("id")), json.dumps(m)
+        if len(msgs) < self.limit:
+            self.idle(self.poll_period_s)
 
-        def run() -> None:
-            try:
-                while not self._stop.is_set():
-                    one_poll()
-                    if self._stop.wait(self.poll_period_s):
-                        return
-            except Exception as e:
-                self.error = e
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
-        if self.error is not None:
-            raise self.error
-
-
-def read_discord_stream(spark, spool_dir: str,
-                        max_files_per_trigger: int | None = None):
-    """File stream over a DiscordSpooler's dir: the message's API JSON is
-    the row `value` (reference: raw message object per message)."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
+    def ack(self, tokens: list) -> None:
+        self._after = tokens[-1]
 
 
 # ---------------------------------------------------------------------------

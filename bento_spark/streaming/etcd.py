@@ -34,9 +34,7 @@ import base64
 import json
 import threading
 import urllib.parse
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from bento_spark.operators.protobuf_codec import (
     decode_message,
@@ -44,6 +42,7 @@ from bento_spark.operators.protobuf_codec import (
     parse_proto,
 )
 from bento_spark.streaming.grpc_wire import GrpcChannel, MiniGrpcServer
+from bento_spark.streaming.spool import SpoolBridge
 
 # Published field numbers: etcd api/etcdserverpb/rpc.proto and
 # api/mvccpb/kv.proto (the subset the watch input needs).
@@ -268,13 +267,15 @@ class EtcdWatcher:
 
 
 @dataclass
-class EtcdWatchSpooler:
+class EtcdWatchSpooler(SpoolBridge):
     """`etcd` input: watch a key/prefix/range, one spool file per
     WatchResponse carrying the flattened events array (the reference
     emits ONE message per response with the array as its structured
     payload — input.go:195-216). Created/progress notifications with no
     events surface as empty arrays only when the reference would deliver
     them (created notify is opt-in; progress responses always flow)."""
+
+    connector = "etcd"
 
     endpoints: list[str]
     key: str
@@ -288,15 +289,9 @@ class EtcdWatchSpooler:
     username: str = ""
     password: str = ""
     auth_enabled: bool = False
-    error: str | None = None
     _watcher: EtcdWatcher | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event,
-                                   repr=False)
 
-    def start(self) -> "EtcdWatchSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
         self._watcher = EtcdWatcher(
             self.endpoints, username=self.username, password=self.password,
             auth_enabled=self.auth_enabled)
@@ -306,64 +301,29 @@ class EtcdWatchSpooler:
             with_range=self.with_range,
             progress_notify=self.progress_notify,
             filter_put=self.filter_put, filter_delete=self.filter_delete))
-        counter = {"n": 0}
-
-        def spool_one(events: list) -> None:
-            counter["n"] += 1
-            name = f"{counter['n']:012d}-{uuid.uuid4().hex}.msg"
-            tmp = spool / f".{name}.tmp"
-            tmp.write_text(json.dumps(events))
-            tmp.rename(spool / name)
-
         # Block until the server confirms creation — start() returning
         # means the watch horizon is ESTABLISHED: every mutation after
         # this point is observed (the async-create race would otherwise
         # silently drop writes landing before the server snapshot).
-        gen = self._watcher.responses()
-        first = next(gen)
+        self._responses = self._watcher.responses()
+        first = next(self._responses)
         if not first.get("created"):
             raise ConnectionError(
                 f"etcd: watch not created: {first.get('cancel_reason', '')}")
-        if self.created_notify:  # clientv3 WithCreatedNotify delivers it
-            spool_one(events_to_maps(first.get("events") or []))
+        # clientv3 WithCreatedNotify delivers the creation response
+        self._created = first if self.created_notify else None
 
-        def run() -> None:
-            import sys
+    def poll(self):
+        resp, self._created = self._created or next(self._responses, None), None
+        if resp is None:
+            raise ConnectionError("watch stream ended")
+        events = events_to_maps(resp.get("events") or [])
+        if events or self.progress_notify or resp.get("created"):
+            yield None, json.dumps(events)
 
-            try:
-                for resp in gen:
-                    if self._stop.is_set():
-                        return
-                    events = events_to_maps(resp.get("events") or [])
-                    if not events and not self.progress_notify:
-                        continue
-                    spool_one(events)
-            except (ConnectionError, OSError) as e:
-                if not self._stop.is_set():
-                    self.error = f"etcd: {e}"
-                    print(self.error, file=sys.stderr)
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
+    def close(self) -> None:
         if self._watcher is not None:
             self._watcher.close()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
-
-
-def read_etcd_stream(spark, spool_dir: str,
-                     max_files_per_trigger: int | None = None):
-    """File stream over an EtcdWatchSpooler's dir: each WatchResponse's
-    flattened events array is the message `value`."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
 
 
 # ---------------------------------------------------------------------------

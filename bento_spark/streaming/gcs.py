@@ -17,8 +17,8 @@ and supply the service-account JSON fields.
 
 Spark-first mapping (identical topology to the S3/Azure listing inputs):
 - input  -> GcsSpooler makes ONE pass over the bucket listing, spooling
-  each object as a JSON envelope (payload base64 + the reference's gcs_*
-  metadata), deleting objects only AFTER the durable rename when
+  each object as one durable file (the reference's gcs_* metadata rides
+  the file name, streaming/spool.py), deleting objects only AFTER the durable rename when
   delete_objects is set.
 - output -> one upload per row, interpolated path as a COLUMN; the four
   collision modes map to ifGenerationMatch / read-concat / existence
@@ -33,8 +33,10 @@ import threading
 import time
 import urllib.parse
 import uuid
-from dataclasses import dataclass, field
-from pathlib import Path
+from dataclasses import dataclass
+from datetime import datetime
+
+from bento_spark.streaming.spool import SpoolBridge
 
 _SCOPE = "https://www.googleapis.com/auth/devstorage.read_write"
 
@@ -214,10 +216,16 @@ class GcsClient:
 
 
 @dataclass
-class GcsSpooler:
+class GcsSpooler(SpoolBridge):
     """`gcp_cloud_storage` input: one pass over the bucket listing
-    (prefix-filtered), one JSON-envelope spool file per object; objects
-    delete only AFTER the durable rename when delete_objects is set."""
+    (prefix-filtered), one spool file per object; objects delete only
+    AFTER the spool file is durable when delete_objects is set."""
+
+    connector = "gcp_cloud_storage"
+    finite = True
+    META = (("gcs_key", "string"), ("gcs_bucket", "string"),
+            ("gcs_last_modified", "string"), ("gcs_last_modified_unix", "bigint"),
+            ("gcs_content_type", "string"), ("gcs_content_encoding", "string"))
 
     endpoint: str
     bucket: str
@@ -225,87 +233,28 @@ class GcsSpooler:
     prefix: str = ""
     delete_objects: bool = False
     credentials: dict | None = None
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _done: threading.Event = field(default_factory=threading.Event, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
 
-    def start(self) -> "GcsSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        client = GcsClient(self.endpoint, self.credentials)
+    def connect(self) -> None:
+        self._client = GcsClient(self.endpoint, self.credentials)
 
-        def run() -> None:
-            try:
-                n = 0
-                for item in client.list_objects(self.bucket, self.prefix):
-                    if self._stop.is_set():
-                        return
-                    name = item["name"]
-                    body = client.get_object(self.bucket, name)
-                    if body is None:
-                        continue  # raced a delete
-                    n += 1
-                    env = {
-                        "payload_b64": base64.b64encode(body).decode(),
-                        "key": name,
-                        "bucket": self.bucket,
-                        "last_modified": item.get("updated"),
-                        "content_type": item.get("contentType"),
-                        "content_encoding": item.get("contentEncoding"),
-                    }
-                    fname = f"{n:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{fname}.tmp"
-                    tmp.write_text(json.dumps(env))
-                    tmp.rename(spool / fname)
-                    if self.delete_objects:
-                        client.delete_object(self.bucket, name)
-            except Exception as e:
-                self.error = e
-            finally:
-                self._done.set()
+    def poll(self):
+        self.finish()
+        for item in self._client.list_objects(self.bucket, self.prefix):
+            if self.stopping:
+                return
+            name = item["name"]
+            body = self._client.get_object(self.bucket, name)
+            if body is None:
+                continue  # raced a delete
+            updated = item.get("updated")
+            unix = (int(datetime.fromisoformat(updated).timestamp())
+                    if updated else None)
+            yield (name, body, name, self.bucket, updated, unix,
+                   item.get("contentType"), item.get("contentEncoding"))
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        ok = self._done.wait(timeout)
-        if self.error is not None:
-            raise self.error
-        return ok
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
-
-
-def read_gcs_stream(spark, spool_dir: str,
-                    max_files_per_trigger: int | None = None):
-    """File stream over a GcsSpooler's dir: JSON envelopes -> `value` +
-    the reference's gcs_* metadata columns
-    (input_cloud_storage.go:312-317), parsed JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    env = F.from_json(F.col("value"), (
-        "payload_b64 STRING, key STRING, bucket STRING, "
-        "last_modified STRING, content_type STRING, content_encoding STRING"))
-    return df.select(
-        F.decode(F.unbase64(env["payload_b64"]), "UTF-8").alias("value"),
-        env["key"].alias("gcs_key"),
-        env["bucket"].alias("gcs_bucket"),
-        env["last_modified"].alias("gcs_last_modified"),
-        F.unix_timestamp(
-            F.to_timestamp(env["last_modified"])).alias("gcs_last_modified_unix"),
-        env["content_type"].alias("gcs_content_type"),
-        env["content_encoding"].alias("gcs_content_encoding"),
-    )
+    def ack(self, tokens: list) -> None:
+        for name in tokens if self.delete_objects else ():
+            self._client.delete_object(self.bucket, name)
 
 
 # ---------------------------------------------------------------------------

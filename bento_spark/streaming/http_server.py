@@ -17,24 +17,27 @@ fleet writing to S3/GCS and ONLY the spool location changes — the Spark
 side of this module is already that shape.
 
 The listener is dev-grade like the reference's (single host, no TLS/auth):
-it acknowledges with 200 only AFTER the spool file is durably renamed into
-place (write-to-temp + atomic rename, so the file source never reads a
-partial body). Responses: 200 on accept, 404 wrong path, 405 non-POST.
+it acknowledges with 200 only AFTER the spool file is durable in place
+(streaming/spool.py: write-to-temp, fsync, atomic rename, directory
+fsync — so the file source never reads a partial body). Responses: 200 on accept, 404 wrong path, 405 non-POST.
 """
 
 from __future__ import annotations
 
+import os
 import threading
-import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+
+from bento_spark.streaming.spool import SpoolBridge
 
 
 @dataclass
-class HttpSpoolServer:
+class HttpSpoolServer(SpoolBridge):
     """Driver-side HTTP listener writing request bodies into a spool dir."""
+
+    connector = "http_server"
 
     spool_dir: str
     host: str = "127.0.0.1"
@@ -47,21 +50,18 @@ class HttpSpoolServer:
     sync_dir: str | None = None
     sync_timeout: float = 15.0
     _httpd: object = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
 
     def start(self) -> "HttpSpoolServer":
         import http.server
         import os
         import time
 
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        self.open_spool()
+        bridge = self
         sync_dir, sync_timeout = self.sync_dir, self.sync_timeout
         if sync_dir:
             Path(sync_dir).mkdir(parents=True, exist_ok=True)
         route = self.path
-        seq = {"n": 0}
-        lock = threading.Lock()
 
         def await_response(request_id: str) -> bytes | None:
             """File-based reply handoff: executor tasks (separate
@@ -91,22 +91,14 @@ class HttpSpoolServer:
                     self.send_error(411)
                     return
                 try:
-                    n = int(self.headers["Content-Length"])
-                    body = self.rfile.read(n)
-                    with lock:
-                        seq["n"] += 1
-                        i = seq["n"]
-                    # monotonic prefix keeps arrival order sortable; uuid
-                    # disambiguates across restarts sharing a spool dir
-                    name = f"{i:012d}-{uuid.uuid4().hex}.msg"
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_bytes(body)
-                    tmp.rename(spool / name)  # atomic: never a partial file
+                    body = self.rfile.read(int(self.headers["Content-Length"]))
+                    request_id = bridge.put(body)
+                    bridge.sync()  # durable before the 200
                 except Exception as e:  # noqa: BLE001 — fault -> 500, keep serving
                     self.send_error(500, str(e))
                     return
                 if sync_dir:
-                    reply = await_response(name[:-len(".msg")])
+                    reply = await_response(request_id)
                     if reply is None:
                         # reference gateway semantics: processing didn't
                         # produce a response in time
@@ -129,15 +121,14 @@ class HttpSpoolServer:
 
         self._httpd = http.server.ThreadingHTTPServer((self.host, self.port), Handler)
         self.port = self._httpd.server_address[1]
-        self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
-        self._thread.start()
+        self.spawn(self._httpd.serve_forever, main=True)
         return self
 
     @property
     def url(self) -> str:
         return f"http://{self.host}:{self.port}{self.path}"
 
-    def stop(self) -> None:
+    def close(self) -> None:
         if self._httpd is not None:
             self._httpd.shutdown()
             self._httpd.server_close()
@@ -145,7 +136,7 @@ class HttpSpoolServer:
 
 
 @dataclass
-class TcpSpoolServer:
+class TcpSpoolServer(SpoolBridge):
     """`socket_server` input: accept TCP connections, spool each
     connection's newline-delimited payload as ONE durable file at
     connection close (reference input_socket_server.go — tcp listener +
@@ -155,35 +146,28 @@ class TcpSpoolServer:
     never be a replayable Structured Streaming source, so durability
     happens at the listener and the stream is a plain file source with its
     offset-log guarantees. Connection == batch: the file becomes visible
-    (atomic rename) only after the sender closes, so the file source never
-    reads a half-sent payload. Dev-grade like the reference's (no TLS)."""
+    only after the sender closes, so the file source never reads a
+    half-sent payload. Dev-grade like the reference's (no TLS)."""
+
+    connector = "socket_server"
 
     spool_dir: str
     host: str = "127.0.0.1"
     port: int = 0  # 0 = ephemeral
     _server: object = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
 
     def start(self) -> "TcpSpoolServer":
         import socketserver
 
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        seq = {"n": 0}
-        lock = threading.Lock()
+        self.open_spool()
+        bridge = self
 
         class Handler(socketserver.StreamRequestHandler):
             def handle(self) -> None:
                 data = self.rfile.read()
-                if not data:
-                    return
-                with lock:
-                    seq["n"] += 1
-                    i = seq["n"]
-                name = f"{i:012d}-{uuid.uuid4().hex}.msg"
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(data)
-                tmp.rename(spool / name)
+                if data:
+                    bridge.put(data)
+                    bridge.sync()
 
         class Server(socketserver.ThreadingTCPServer):
             allow_reuse_address = True
@@ -191,15 +175,14 @@ class TcpSpoolServer:
 
         self._server = Server((self.host, self.port), Handler)
         self.port = self._server.server_address[1]
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
-        self._thread.start()
+        self.spawn(self._server.serve_forever, main=True)
         return self
 
     @property
     def address(self) -> tuple[str, int]:
         return (self.host, self.port)
 
-    def stop(self) -> None:
+    def close(self) -> None:
         if self._server is not None:
             self._server.shutdown()
             self._server.server_close()
@@ -267,7 +250,7 @@ def ws_connect(url: str, *, tls_insecure: bool = False,
 
 
 @dataclass
-class WebSocketSpooler:
+class WebSocketSpooler(SpoolBridge):
     """`websocket` input: connect to a ws:// URL as a client, spool each
     received text/binary message as one durable file (reference
     internal/impl/io/input_websocket.go — url + optional open_message).
@@ -276,8 +259,11 @@ class WebSocketSpooler:
     (Sec-WebSocket-Key/-Accept, §4), frame parsing with extended lengths
     (§5.2), ping→pong keepalive (§5.5.2-5.5.3), client-side masking (§5.3;
     server frames arrive unmasked). Fragmented messages (FIN=0)
-    re-assemble before spooling. Same spool-bridge rationale as the other
-    push sources: the stream is the replayable file source."""
+    re-assemble before spooling. A close frame ends the input, like the
+    reference. Same spool-bridge rationale as the other push sources:
+    the stream is the replayable file source."""
+
+    connector = "websocket"
 
     url: str
     spool_dir: str
@@ -285,8 +271,6 @@ class WebSocketSpooler:
     # wss:// verification knob (input_websocket.go's tls.skip_cert_verify):
     # True trusts any chain — in-process test servers and private CAs
     tls_insecure: bool = False
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
     _sock: object = field(default=None, repr=False)
 
     # -- frame helpers (client side) ---------------------------------------
@@ -304,105 +288,78 @@ class WebSocketSpooler:
         masked = bytes(b ^ mask_key[i % 4] for i, b in enumerate(payload))
         return head + mask_key + masked
 
-    def start(self) -> "WebSocketSpooler":
-        import os as _os
-
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
         sock, rest = ws_connect(self.url, tls_insecure=self.tls_insecure)
         if self.open_message is not None:
-            sock.sendall(self.client_frame(0x1, self.open_message.encode(), _os.urandom(4)))
+            sock.sendall(self.client_frame(0x1, self.open_message.encode(), os.urandom(4)))
         self._sock = sock
-        seq = {"n": 0}
+        self._pre = bytearray(rest)
 
-        def read_exact(n: int, pre: bytearray) -> bytes:
-            while len(pre) < n:
-                chunk = sock.recv(65536)
-                if not chunk:
-                    raise ConnectionError("closed")
-                pre.extend(chunk)
-            out = bytes(pre[:n])
-            del pre[:n]
-            return out
+    def _read_exact(self, n: int) -> bytes:
+        pre = self._pre
+        while len(pre) < n:
+            chunk = self._sock.recv(65536)
+            if not chunk:
+                raise ConnectionError("closed")
+            pre.extend(chunk)
+        out = bytes(pre[:n])
+        del pre[:n]
+        return out
 
-        def reader() -> None:
-            pre = bytearray(rest)
-            fragments: list[bytes] = []
-            try:
-                while not self._stop.is_set():
-                    b0, b1 = read_exact(2, pre)
-                    fin, opcode = b0 & 0x80, b0 & 0x0F
-                    n = b1 & 0x7F
-                    if n == 126:
-                        n = int.from_bytes(read_exact(2, pre), "big")
-                    elif n == 127:
-                        n = int.from_bytes(read_exact(8, pre), "big")
-                    if b1 & 0x80:
-                        # a masked server->client frame is a protocol error
-                        # the client MUST fail the connection on (§5.1) —
-                        # spooling it (even unmasked) would feed a
-                        # non-conforming peer's bytes into the pipeline
-                        raise ConnectionError(
-                            "websocket: masked server frame (RFC 6455 §5.1) — failing the connection"
-                        )
-                    payload = read_exact(n, pre)
-                    if opcode == 0x9:  # ping -> pong with same payload
-                        sock.sendall(self.client_frame(0xA, payload, _os.urandom(4)))
-                        continue
-                    if opcode == 0x8:  # close
-                        return
-                    if opcode in (0x1, 0x2, 0x0):
-                        fragments.append(payload)
-                        if fin:
-                            msg = b"".join(fragments)
-                            fragments = []
-                            seq["n"] += 1
-                            name = f"{seq['n']:012d}-{uuid.uuid4().hex}.msg"
-                            tmp = spool / f".{name}.tmp"
-                            tmp.write_bytes(msg)
-                            tmp.rename(spool / name)
-            except (ConnectionError, OSError):
-                # socket teardown ends the input, like the reference; close
-                # eagerly so a protocol failure (masked server frame) tears
-                # the connection down rather than leaving it half-open
-                try:
-                    sock.close()
-                except OSError:
-                    pass
+    def poll(self):
+        fragments: list[bytes] = []
+        while True:
+            b0, b1 = self._read_exact(2)
+            fin, opcode = b0 & 0x80, b0 & 0x0F
+            n = b1 & 0x7F
+            if n == 126:
+                n = int.from_bytes(self._read_exact(2), "big")
+            elif n == 127:
+                n = int.from_bytes(self._read_exact(8), "big")
+            if b1 & 0x80:
+                # a masked server->client frame is a protocol error the
+                # client MUST fail the connection on (§5.1) — spooling it
+                # would feed a non-conforming peer's bytes into the pipeline
+                self._sock.close()
+                raise ConnectionError(
+                    "websocket: masked server frame (RFC 6455 §5.1) — failing the connection")
+            payload = self._read_exact(n)
+            if opcode == 0x9:  # ping -> pong with same payload
+                self._sock.sendall(self.client_frame(0xA, payload, os.urandom(4)))
+            elif opcode == 0x8:  # close
+                self.finish()
                 return
+            elif opcode in (0x1, 0x2, 0x0):
+                fragments.append(payload)
+                if fin:
+                    yield None, b"".join(fragments)
+                    return
 
-        self._thread = threading.Thread(target=reader, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
+    def close(self) -> None:
         if self._sock is not None:
             try:
-                import os as _os
-
-                self._sock.sendall(self.client_frame(0x8, b"", _os.urandom(4)))
+                self._sock.sendall(self.client_frame(0x8, b"", os.urandom(4)))
                 self._sock.close()
             except OSError:
                 pass
             self._sock = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
 
 
 @dataclass
-class HttpPollSpooler:
+class HttpPollSpooler(SpoolBridge):
     """`http_client` input: poll a URL on an interval and spool each
     response body as one durable file (reference
     internal/impl/io/input_http_client.go — GET-per-interval with an
     optional payload; streaming codecs apply downstream).
 
     Spool-bridge rationale as above: polling is a side effect, the stream
-    is the replayable file source. Dedup of identical consecutive
+    is the replayable file source. A failed request is retried on the
+    next tick. Dedup of identical consecutive
     responses is opt-in (`drop_repeats`, the reference's drop_empty
     cousin): pollers against mostly-static endpoints would otherwise spool
     one copy per tick."""
+
+    connector = "http_client"
 
     url: str
     spool_dir: str
@@ -411,74 +368,22 @@ class HttpPollSpooler:
     headers: dict | None = None
     drop_empty: bool = True
     drop_repeats: bool = False
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
+    _last: bytes | None = field(default=None, repr=False)
 
-    def start(self) -> "HttpPollSpooler":
+    def _get(self) -> bytes:
         import urllib.request
 
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        seq = {"n": 0}
-        state = {"last": None}
+        req = urllib.request.Request(self.url, method=self.method, headers=self.headers or {})
+        with urllib.request.urlopen(req, timeout=10) as resp:
+            return resp.read()
 
-        def poll_loop() -> None:
-            while not self._stop.is_set():
-                try:
-                    req = urllib.request.Request(
-                        self.url, method=self.method, headers=self.headers or {}
-                    )
-                    with urllib.request.urlopen(req, timeout=10) as resp:
-                        body = resp.read()
-                    if (body or not self.drop_empty) and not (
-                        self.drop_repeats and body == state["last"]
-                    ):
-                        state["last"] = body
-                        seq["n"] += 1
-                        name = f"{seq['n']:012d}-{uuid.uuid4().hex}.msg"
-                        tmp = spool / f".{name}.tmp"
-                        tmp.write_bytes(body)
-                        tmp.rename(spool / name)
-                except Exception:  # noqa: BLE001 — poll faults retry next tick
-                    pass
-                self._stop.wait(self.interval_s)
-
-        self._thread = threading.Thread(target=poll_loop, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_spool_stream(
-    spark: SparkSession,
-    spool_dir: str,
-    whole_body: bool = True,
-    max_files_per_trigger: int | None = None,
-    with_request_id: bool = False,
-) -> DataFrame:
-    """File stream over the spool dir: one row per request body
-    (whole_body=True, the reference's message-per-request semantics) or one
-    row per body line (False). Column: `value string`; `with_request_id`
-    adds the spool file's stem as `request_id` — the routing key a
-    `sync_response` output uses to reply to the originating HTTP request."""
-    from pyspark.sql import functions as F
-
-    rd = spark.readStream.format("text").option("wholetext", str(whole_body).lower())
-    if max_files_per_trigger is not None:
-        rd = rd.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    # only completed spool files (dotfiles/tmp are hidden from file sources
-    # by Spark's default path filter; the glob keeps it explicit)
-    df = rd.load(f"{spool_dir}/*.msg")
-    if with_request_id:
-        df = df.withColumn(
-            "request_id", F.regexp_extract(F.input_file_name(), r"([^/]+)\.msg$", 1)
-        )
-    return df
+    def poll(self):
+        body = self.request(self._get)
+        if body is not None and (body or not self.drop_empty) and not (
+                self.drop_repeats and body == self._last):
+            self._last = body
+            yield None, body
+        self.idle(self.interval_s)
 
 
 class HttpServeOutput:

@@ -22,8 +22,8 @@ Spark-first mapping (same spool-bridge rationale as every push source):
 - input  -> KafkaSpooler fetches per-partition from tracked offsets and
   persists each record as a durable spool file BEFORE advancing the
   offset file (write-then-commit = at-least-once, the reference input's
-  guarantee). topic/partition/offset/key ride the spool FILENAME
-  hex-encoded and surface as `kafka_topic`/`kafka_partition`/
+  guarantee). topic/partition/offset/key ride the spool file's metadata
+  (streaming/spool.py) and surface as `kafka_topic`/`kafka_partition`/
   `kafka_offset`/`kafka_key` columns decoded JVM-side, so replays keep
   exact record identity and downstream dedupe-by-offset is a pure
   relational op.
@@ -52,6 +52,8 @@ import time
 import uuid
 from dataclasses import dataclass, field
 from pathlib import Path
+
+from bento_spark.streaming.spool import SpoolBridge
 
 # --------------------------------------------------------------------------
 # CRC32C (Castagnoli, reflected poly 0x82F63B78) — slice-by-8
@@ -653,14 +655,20 @@ class KafkaWireClient:
 
 
 @dataclass
-class KafkaSpooler:
+class KafkaSpooler(SpoolBridge):
     """`kafka_franz` input (input_kafka_franz.go): fetch every partition of
     the subscribed topics from tracked offsets and spool each record as one
     durable file. Commit order is files-then-offsets (the offset file is
     atomically renamed AFTER the records it covers are durable), so a crash
     between the two replays records instead of losing them — at-least-once,
     the reference's guarantee. `checkpoint_limit` bounds records fetched
-    per poll (the reference's in-flight bound)."""
+    per poll (the reference's in-flight bound). A null record value (a
+    compacted-topic tombstone) spools as a null message."""
+
+    connector = "kafka_franz"
+    META = (("kafka_topic", "string"), ("kafka_partition", "int"),
+            ("kafka_offset", "bigint"), ("kafka_ts", "timestamp_ms"),
+            ("kafka_key", "string"))
 
     host: str
     port: int
@@ -669,154 +677,79 @@ class KafkaSpooler:
     checkpoint_limit: int = 4096
     poll_wait_ms: int = 200
     sasl: dict | None = None
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
     _client: KafkaWireClient | None = field(default=None, repr=False)
 
     def _reconnect(self) -> bool:
         """Replace the dead connection with backoff; False once stopped."""
         delay = 0.2
-        while not self._stop.is_set():
+        while not self.stopping:
             try:
                 self._client = KafkaWireClient(self.host, self.port,
                                                sasl=self.sasl)
                 return True
             except (ConnectionError, OSError):
-                self._stop.wait(delay)
+                self.idle(delay)
                 delay = min(delay * 2, 5.0)
         return False
 
-    def start(self) -> "KafkaSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
         client = KafkaWireClient(self.host, self.port, sasl=self.sasl)
         self._client = client
         meta = client.metadata(self.topics)
-        offsets_path = spool / ".offsets.json"
+        self._offsets_path = Path(self.spool_dir) / ".offsets.json"
         offsets: dict[str, int] = {}
-        if offsets_path.exists():
-            offsets = {k: int(v) for k, v in json.loads(offsets_path.read_text()).items()}
-        partitions: list[tuple[str, int]] = []
+        if self._offsets_path.exists():
+            offsets = {k: int(v) for k, v in json.loads(self._offsets_path.read_text()).items()}
+        self._partitions: list[tuple[str, int]] = []
         for topic, parts in meta.items():
             for pid in sorted(parts):
-                partitions.append((topic, pid))
+                self._partitions.append((topic, pid))
                 key = f"{topic}/{pid}"
                 if key not in offsets:
                     offsets[key] = client.list_offsets(topic, pid, -2)
-        seq = {"n": 0}
+        self._offsets = offsets
 
-        def commit_offsets() -> None:
-            tmp = spool / ".offsets.json.tmp"
-            tmp.write_text(json.dumps(offsets))
-            tmp.rename(offsets_path)
+    def poll(self):
+        import sys
 
-        def run() -> None:
-            import sys
+        progressed = False
+        for topic, pid in self._partitions:
+            if self.stopping:
+                return
+            key = f"{topic}/{pid}"
+            try:
+                _hw, recs = self._client.fetch(
+                    topic, pid, self._offsets[key], max_wait_ms=self.poll_wait_ms)
+            except (ConnectionError, OSError) as e:
+                if self.stopping:
+                    return  # socket closed by stop()
+                # transient broker loss: reconnect with backoff instead of
+                # killing the consumer
+                print(f"kafka_franz: fetch failed ({e}); reconnecting", file=sys.stderr)
+                if not self._reconnect():
+                    return
+                continue
+            except ValueError as e:
+                # un-decodable batch (compression/CRC/magic): fail loudly —
+                # skipping would lose data, looping would spin on the offset
+                raise ValueError(
+                    f"{e} (topic={topic} p={pid} offset={self._offsets[key]})") from e
+            for off, ts, rkey, value, _hdrs in recs[: self.checkpoint_limit]:
+                # the spec's "no timestamp" sentinel -1 clamps to 0
+                yield (key, off + 1), value, topic, pid, off, max(ts, 0), rkey or None
+                progressed = True
+        if not progressed:
+            self.idle(self.poll_wait_ms / 1000.0)
 
-            while not self._stop.is_set():
-                progressed = False
-                for topic, pid in partitions:
-                    if self._stop.is_set():
-                        return
-                    key = f"{topic}/{pid}"
-                    try:
-                        assert self._client is not None
-                        _hw, recs = self._client.fetch(
-                            topic, pid, offsets[key], max_wait_ms=self.poll_wait_ms
-                        )
-                    except (ConnectionError, OSError, AssertionError) as e:
-                        if self._stop.is_set():
-                            return  # socket closed by stop()
-                        # transient broker loss: reconnect with backoff
-                        # instead of silently killing the consumer
-                        print(f"kafka_franz: fetch failed ({e}); reconnecting",
-                              file=sys.stderr)
-                        if not self._reconnect():
-                            return
-                        continue
-                    except ValueError as e:
-                        # un-decodable batch (compression/CRC/magic):
-                        # surface loudly — skipping would lose data,
-                        # looping would spin on the same offset
-                        self.error = f"kafka_franz: {e} (topic={topic} p={pid} offset={offsets[key]})"
-                        print(self.error, file=sys.stderr)
-                        return
-                    for off, ts, rkey, value, _hdrs in recs[: self.checkpoint_limit]:
-                        seq["n"] += 1
-                        # topic/partition/offset/key ride the filename ->
-                        # kafka_* metadata columns (input_kafka_franz.go
-                        # record metadata), decoded JVM-side. The spec's
-                        # "no timestamp" sentinel -1 clamps to 0 so the
-                        # fixed-width filename stays parseable.
-                        # the 1-char flag distinguishes a tombstone (null
-                        # value, compacted-topic delete) from an empty
-                        # message; the body gets a 1-byte pad because
-                        # Spark's text source emits NO row for a 0-byte
-                        # file — tombstones and empty messages would
-                        # silently vanish from the stream
-                        name = (
-                            f"{seq['n']:012d}-{topic.encode().hex()}-{pid:05d}"
-                            f"-{off:020d}-{max(ts, 0):020d}-{(rkey or b'').hex()}"
-                            f"-{'n' if value is None else 'v'}"
-                            f"-{uuid.uuid4().hex}.msg"
-                        )
-                        tmp = spool / f".{name}.tmp"
-                        tmp.write_bytes(b"." + (value or b""))
-                        tmp.rename(spool / name)
-                        offsets[key] = off + 1
-                        progressed = True
-                    if progressed:
-                        commit_offsets()
-                if not progressed:
-                    self._stop.wait(self.poll_wait_ms / 1000.0)
+    def ack(self, tokens: list) -> None:
+        self._offsets.update(tokens)
+        tmp = self._offsets_path.with_name(".offsets.json.tmp")
+        tmp.write_text(json.dumps(self._offsets))
+        tmp.rename(self._offsets_path)
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
+    def close(self) -> None:
         if self._client is not None:
             self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_kafka_wire_stream(spark, spool_dir: str,
-                           max_files_per_trigger: int | None = None):
-    """File stream over a KafkaSpooler's dir: `value string` plus
-    kafka_topic/kafka_partition/kafka_offset/kafka_ts/kafka_key columns
-    decoded from the filename JVM-side — the same metadata surface as the
-    jar-backed source (streaming/kafka.py), so pipelines swap freely."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = (r"/\d{12}-([0-9a-f]*)-(\d{5})-(\d{20})-(\d{20})-([0-9a-f]*)"
-           r"-([nv])-[0-9a-f]{32}\.msg$")
-    key = F.decode(F.unhex(F.regexp_extract(fname, pat, 5)), "UTF-8")
-    return (
-        # strip the 1-byte pad (see the spooler: 0-byte files emit no row
-        # from the text source); tombstones (flag 'n') surface value as
-        # NULL — compacted-topic delete semantics survive the spool bridge
-        df.withColumn("value", F.when(
-              F.regexp_extract(fname, pat, 6) == "n",
-              F.lit(None).cast("string"))
-          .otherwise(F.expr("substring(value, 2)")))
-          .withColumn("kafka_topic",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("kafka_partition", F.regexp_extract(fname, pat, 2).cast("int"))
-          .withColumn("kafka_offset", F.regexp_extract(fname, pat, 3).cast("bigint"))
-          .withColumn("kafka_ts", F.timestamp_millis(
-              F.regexp_extract(fname, pat, 4).cast("bigint")))
-          .withColumn("kafka_key", F.when(key != "", key))
-    )
 
 
 # --------------------------------------------------------------------------

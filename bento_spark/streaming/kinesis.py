@@ -18,7 +18,7 @@ Spark-first mapping (same spool-bridge rationale as kafka_franz):
 - input  -> KinesisSpooler iterates every shard from TRIM_HORIZON (or
   the checkpointed sequence), spools each record BEFORE advancing the
   sequence file (files-then-checkpoint = at-least-once). shard id +
-  sequence number + partition key ride the spool FILENAME and surface as
+  sequence number + partition key ride the spool file's metadata as
   `kinesis_shard`/`kinesis_sequence`/`kinesis_partition_key` columns.
 - output -> foreachBatch PutRecords (<=500/request, the API cap), data
   serialized JVM-side, the interpolated partition key as a COLUMN.
@@ -30,11 +30,11 @@ import base64
 import hashlib
 import json
 import threading
-import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from pathlib import Path
 
 from bento_spark.streaming.sqs import sigv4_headers
+from bento_spark.streaming.spool import SpoolBridge
 
 _TARGET = "Kinesis_20131202"
 
@@ -130,12 +130,16 @@ class KinesisClient:
 
 
 @dataclass
-class KinesisSpooler:
+class KinesisSpooler(SpoolBridge):
     """`aws_kinesis` input (input_kinesis.go): iterate every shard of the
     subscribed streams, spool each record, checkpoint sequence numbers to
     the spool dir AFTER the covered records are durable (files-then-
     checkpoint = at-least-once — the reference's DynamoDB checkpointer
     plays this role across balanced consumers)."""
+
+    connector = "aws_kinesis"
+    META = (("kinesis_stream", "string"), ("kinesis_shard", "string"),
+            ("kinesis_sequence", "string"), ("kinesis_partition_key", "string"))
 
     endpoint: str
     streams: list[str]
@@ -145,126 +149,60 @@ class KinesisSpooler:
     region: str = "us-east-1"
     checkpoint_limit: int = 1000
     poll_wait_s: float = 0.05
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "KinesisSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
         client = KinesisClient(self.endpoint, self.access_key, self.secret_key,
                                region=self.region)
-        ckpt_path = spool / ".sequences.json"
-        sequences: dict[str, str] = {}
-        if ckpt_path.exists():
-            sequences = json.loads(ckpt_path.read_text())
-        iterators: dict[tuple[str, str], str] = {}
+        self._client = client
+        self._ckpt_path = Path(self.spool_dir) / ".sequences.json"
+        self._sequences: dict[str, str] = {}
+        if self._ckpt_path.exists():
+            self._sequences = json.loads(self._ckpt_path.read_text())
+        self._iterators: dict[tuple[str, str], str] = {}
         for stream in self.streams:
             for shard in client.list_shards(stream):
-                key = f"{stream}/{shard}"
-                iterators[(stream, shard)] = client.get_shard_iterator(
-                    stream, shard, after_sequence=sequences.get(key))
-        seq_counter = {"n": 0}
+                self._iterators[(stream, shard)] = client.get_shard_iterator(
+                    stream, shard, after_sequence=self._sequences.get(f"{stream}/{shard}"))
 
-        def commit() -> None:
-            tmp = spool / ".sequences.json.tmp"
-            tmp.write_text(json.dumps(sequences))
-            tmp.rename(ckpt_path)
+    def poll(self):
+        progressed = False
+        for (stream, shard), it in list(self._iterators.items()):
+            if self.stopping:
+                return
+            key = f"{stream}/{shard}"
+            try:
+                records, nxt = self._client.get_records(it, limit=self.checkpoint_limit)
+            except (ConnectionError, OSError):
+                if self.idle(0.5):
+                    return
+                # expired/invalid iterator or network loss: re-acquire from
+                # the checkpointed sequence (retrying the same token would
+                # stall forever)
+                try:
+                    self._iterators[(stream, shard)] = self._client.get_shard_iterator(
+                        stream, shard, after_sequence=self._sequences.get(key))
+                except (ConnectionError, OSError):
+                    pass
+                continue
+            if nxt:
+                self._iterators[(stream, shard)] = nxt
+            else:
+                # closed shard (resharding): a null iterator means the
+                # shard is drained once its last records are spooled
+                del self._iterators[(stream, shard)]
+            for rec in records:
+                sn = rec.get("SequenceNumber", "")
+                yield ((key, sn), base64.b64decode(rec.get("Data", "")), stream, shard, sn,
+                       rec.get("PartitionKey", ""))
+                progressed = True
+        if not progressed:
+            self.idle(self.poll_wait_s)
 
-        def run() -> None:
-            import sys
-
-            while not self._stop.is_set():
-                progressed = False
-                for (stream, shard), it in list(iterators.items()):
-                    if self._stop.is_set():
-                        return
-                    try:
-                        try:
-                            records, nxt = client.get_records(
-                                it, limit=self.checkpoint_limit)
-                        except (ConnectionError, OSError):
-                            if self._stop.wait(0.5):
-                                return
-                            # expired/invalid iterator or network loss:
-                            # re-acquire from the checkpointed sequence
-                            # (retrying the same token would stall forever)
-                            try:
-                                iterators[(stream, shard)] = client.get_shard_iterator(
-                                    stream, shard,
-                                    after_sequence=sequences.get(f"{stream}/{shard}"))
-                            except (ConnectionError, OSError):
-                                pass
-                            continue
-                        if nxt:
-                            iterators[(stream, shard)] = nxt
-                        elif not records:
-                            # closed shard (resharding): a null iterator
-                            # with no records means the shard is drained
-                            del iterators[(stream, shard)]
-                            continue
-                        for rec in records:
-                            seq_counter["n"] += 1
-                            data = base64.b64decode(rec.get("Data", ""))
-                            sn = rec.get("SequenceNumber", "")
-                            pk = rec.get("PartitionKey", "")
-                            name = (f"{seq_counter['n']:012d}"
-                                    f"-{stream.encode().hex()}"
-                                    f"-{shard.encode().hex()}"
-                                    f"-{sn.encode().hex()}-{pk.encode().hex()}"
-                                    f"-{uuid.uuid4().hex}.msg")
-                            tmp = spool / f".{name}.tmp"
-                            tmp.write_bytes(data)
-                            tmp.rename(spool / name)
-                            sequences[f"{stream}/{shard}"] = sn
-                            progressed = True
-                        if records:
-                            commit()
-                        if not nxt and records:
-                            del iterators[(stream, shard)]  # closed, drained
-                    except Exception as e:  # decode/disk/protocol faults
-                        self.error = f"kinesis: {stream}/{shard}: {e}"
-                        print(self.error, file=sys.stderr)
-                        return
-                if not progressed:
-                    self._stop.wait(self.poll_wait_s)
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_kinesis_stream(spark, spool_dir: str,
-                        max_files_per_trigger: int | None = None):
-    """File stream over a KinesisSpooler's dir: `value string` +
-    kinesis_stream/kinesis_shard/kinesis_sequence/kinesis_partition_key
-    decoded from the filename JVM-side (the reference's record
-    metadata)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = (r"/\d{12}-([0-9a-f]*)-([0-9a-f]*)-([0-9a-f]*)-([0-9a-f]*)"
-           r"-[0-9a-f]{32}\.msg$")
-
-    def hexcol(i: int):
-        return F.decode(F.unhex(F.regexp_extract(fname, pat, i)), "UTF-8")
-
-    return (
-        df.withColumn("kinesis_stream", hexcol(1))
-          .withColumn("kinesis_shard", hexcol(2))
-          .withColumn("kinesis_sequence", hexcol(3))
-          .withColumn("kinesis_partition_key", hexcol(4))
-    )
+    def ack(self, tokens: list) -> None:
+        self._sequences.update(tokens)
+        tmp = self._ckpt_path.with_name(".sequences.json.tmp")
+        tmp.write_text(json.dumps(self._sequences))
+        tmp.rename(self._ckpt_path)
 
 
 # --------------------------------------------------------------------------

@@ -40,6 +40,7 @@ class _StreamInfo:
     # starting=True marks a RESERVATION: the id is claimed (duplicate
     # creates fail fast) while compile+start runs outside the manager lock
     starting: bool = False
+    bridge: Any = None  # the input's spool bridge (Pipeline.start_input), if any
     # per-stream lock for totals accumulation (concurrent /stats requests
     # through ThreadingHTTPServer must not double-count a batch)
     lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
@@ -60,8 +61,14 @@ class StreamManager:
     def _start(self, stream_id: str, config_src: str, available_now: bool):
         pipe = compile_yaml(config_src)
         ck = os.path.join(self.checkpoint_root, stream_id)
-        q = pipe.run_stream(self.spark, checkpoint=ck, available_now=available_now)
-        return pipe, q
+        bridge = pipe.start_input()
+        try:
+            q = pipe.run_stream(self.spark, checkpoint=ck, available_now=available_now)
+        except BaseException:
+            if bridge is not None:
+                bridge.stop()
+            raise
+        return pipe, q, bridge
 
     def _fill_reservation(self, stream_id: str, slot: _StreamInfo,
                           config_src: str, available_now: bool) -> None:
@@ -69,14 +76,14 @@ class StreamManager:
         seconds), then swap the result into the reserved slot; a failed
         start releases the reservation so the id is creatable again."""
         try:
-            pipe, q = self._start(stream_id, config_src, available_now)
+            pipe, q, bridge = self._start(stream_id, config_src, available_now)
         except BaseException:
             with self._lock:
                 if self._streams.get(stream_id) is slot:
                     del self._streams[stream_id]
             raise
         with self._lock:
-            slot.pipeline, slot.query = pipe, q
+            slot.pipeline, slot.query, slot.bridge = pipe, q, bridge
             slot.created_at = time.time()
             slot.starting = False
 
@@ -117,6 +124,8 @@ class StreamManager:
             info.query.awaitTermination(30)
         except Exception:  # noqa: BLE001 — already-failed queries stop dirty
             pass
+        if info.bridge is not None:
+            info.bridge.stop()
 
     def delete(self, stream_id: str) -> None:
         """DELETE /streams/{id}: stop the query and drop the registration

@@ -16,7 +16,8 @@ Spark-first mapping (same spool-bridge rationale as every push source):
   replayable Spark source; QoS1 PUBACK is only sent AFTER the spool file
   is durably renamed — the broker redelivers anything unacked, giving
   at-least-once into the spool, dedupe-able downstream).
-  The topic rides the spool FILENAME (hex-encoded) and surfaces as an
+  The topic rides the spool file's metadata (streaming/spool.py) and
+  surfaces as an
   `mqtt_topic` column, decoded JVM-side — no Python in the hot path.
 - output -> foreachBatch publisher: one pooled connection per partition,
   rows publish as JSON (executor-side, never a driver loop); QoS1 waits
@@ -36,7 +37,8 @@ import struct
 import threading
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import SpoolBridge
 
 CONNECT, CONNACK, PUBLISH, PUBACK = 1, 2, 3, 4
 SUBSCRIBE, SUBACK, UNSUBSCRIBE, UNSUBACK = 8, 9, 10, 11
@@ -161,9 +163,11 @@ class MqttClient:
             if ptype != PUBACK or struct.unpack(">H", ack[:2])[0] != pid:
                 raise ConnectionError("mqtt: PUBACK missing for QoS1 publish")
 
-    def recv_publish(self) -> tuple[str, bytes, int, bool] | None:
+    def recv_publish(self, auto_ack: bool = True) -> tuple[str, bytes, int, bool] | None:
         """Block for the next inbound PUBLISH -> (topic, payload, qos,
-        retained); answers PINGREQ-level housekeeping; None on DISCONNECT."""
+        retained); answers PINGREQ-level housekeeping; None on DISCONNECT.
+        With `auto_ack=False` a QoS1 PUBLISH is not PUBACKed here: its
+        packet id is left in `last_packet_id` for `puback()`."""
         while True:
             ptype, flags, body = read_packet(self.sock)
             if ptype == PUBLISH:
@@ -171,15 +175,20 @@ class MqttClient:
                 tlen = struct.unpack(">H", body[:2])[0]
                 topic = body[2:2 + tlen].decode("utf-8")
                 i = 2 + tlen
+                self.last_packet_id = None
                 if qos:
-                    pid = struct.unpack(">H", body[i:i + 2])[0]
+                    self.last_packet_id = struct.unpack(">H", body[i:i + 2])[0]
                     i += 2
-                    self.sock.sendall(encode_packet(PUBACK, 0, struct.pack(">H", pid)))
+                    if auto_ack:
+                        self.puback(self.last_packet_id)
                 return topic, body[i:], qos, bool(flags & 0x01)
             if ptype == PINGRESP:
                 continue
             if ptype == DISCONNECT:
                 return None
+
+    def puback(self, packet_id: int) -> None:
+        self.sock.sendall(encode_packet(PUBACK, 0, struct.pack(">H", packet_id)))
 
     def ping(self) -> None:
         self.sock.sendall(encode_packet(PINGREQ, 0, b""))
@@ -204,10 +213,13 @@ class MqttClient:
 
 
 @dataclass
-class MqttSpooler:
+class MqttSpooler(SpoolBridge):
     """`mqtt` input (input.go): subscribe and spool each message as one
-    durable file. QoS1 semantics hold end-to-end: recv_publish PUBACKs
-    only after this loop's atomic rename (the file IS the ack barrier)."""
+    durable file. QoS1 semantics hold end-to-end: the PUBACK goes out
+    only once the spool file is durable (the file IS the ack barrier)."""
+
+    connector = "mqtt"
+    META = (("mqtt_topic", "string"),)
 
     host: str
     port: int
@@ -217,12 +229,8 @@ class MqttSpooler:
     client_id: str | None = None
     clean_session: bool = True
     _client: MqttClient | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "MqttSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
         # subscribe BEFORE returning so no publish races the subscription
         client = MqttClient(self.host, self.port, client_id=self.client_id,
                             clean_session=self.clean_session)
@@ -231,54 +239,22 @@ class MqttSpooler:
         # otherwise kill an IDLE subscriber after 10s
         client.sock.settimeout(None)
         self._client = client
-        seq = {"n": 0}
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.recv_publish()
-                except (ConnectionError, OSError, ValueError):
-                    return  # socket closed by stop() or broker
-                if got is None:
-                    return
-                topic, payload, qos, retained = got
-                seq["n"] += 1
-                # topic rides the filename hex-encoded -> an mqtt_topic
-                # column decodable JVM-side (unhex), mirroring the
-                # reference's mqtt_topic metadata
-                name = f"{seq['n']:012d}-{topic.encode('utf-8').hex()}-{uuid.uuid4().hex}.msg"
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(payload)
-                tmp.rename(spool / name)
+    def poll(self):
+        got = self._client.recv_publish(auto_ack=False)
+        if got is None:
+            raise ConnectionError("broker sent DISCONNECT")
+        topic, payload, _qos, _retained = got
+        yield self._client.last_packet_id, payload, topic
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    def ack(self, tokens: list) -> None:
+        for packet_id in tokens:
+            if packet_id is not None:
+                self._client.puback(packet_id)
 
-    def stop(self) -> None:
-        self._stop.set()
+    def close(self) -> None:
         if self._client is not None:
             self._client.close()  # unblocks the recv loop
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_mqtt_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over an MqttSpooler's dir: `value string` + `mqtt_topic`
-    (decoded from the filename JVM-side — input.go's mqtt_topic meta)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    return df.withColumn(
-        "mqtt_topic",
-        F.decode(F.unhex(F.regexp_extract(
-            F.input_file_name(), r"/\d{12}-([0-9a-f]*)-[0-9a-f]{32}\.msg$", 1)), "UTF-8"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -443,6 +419,10 @@ class MiniMqttBroker:
         with self._lock:
             for c, _, _ in self._subs:
                 try:
+                    # shutdown, not just close: the serve thread's pending
+                    # recv keeps a closed fd open, so clients would never
+                    # see the broker go away
+                    c.shutdown(socket.SHUT_RDWR)
                     c.close()
                 except OSError:
                     pass

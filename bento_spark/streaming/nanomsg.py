@@ -29,9 +29,9 @@ from __future__ import annotations
 import socket
 import struct
 import threading
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import SpoolBridge
 
 _PROTO = {"PAIR": 16, "PUB": 32, "SUB": 33, "REQ": 48, "REP": 49,
           "PUSH": 80, "PULL": 81}
@@ -234,11 +234,13 @@ class NanomsgSocket:
 
 
 @dataclass
-class NanomsgSpooler:
+class NanomsgSpooler(SpoolBridge):
     """`nanomsg` input (input.go): PULL or SUB per `socket_type`; SUB
     REQUIRES at least one sub_filter ('' = everything — input.go:109).
     Each message spools as one durable file (at-most-once once delivered,
     the mangos contract — no acks in the protocol)."""
+
+    connector = "nanomsg"
 
     socket_type: str  # PULL | SUB
     spool_dir: str
@@ -246,10 +248,8 @@ class NanomsgSpooler:
     bind: bool = False
     sub_filters: list[str] | None = None
     _sock: NanomsgSocket | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "NanomsgSpooler":
+    def connect(self) -> None:
         if self.socket_type not in ("PULL", "SUB"):
             raise ValueError("nanomsg input socket_type must be PULL or SUB")
         if self.socket_type == "SUB" and not self.sub_filters:
@@ -257,8 +257,6 @@ class NanomsgSpooler:
                 "must provide at least one sub filter when connecting with a "
                 "SUB socket, in order to subscribe to all messages add an "
                 "empty string")  # input.go:109 verbatim contract
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
         sock = NanomsgSocket(
             self.socket_type,
             [f.encode("utf-8") for f in (self.sub_filters or [])])
@@ -269,44 +267,19 @@ class NanomsgSpooler:
             for u in self.urls:
                 sock.connect(*parse_nanomsg_url(u))
         self._sock = sock
-        seq = {"n": 0}
 
-        def run() -> None:
-            while not self._stop.is_set():
-                msg = sock.recv(timeout=0.2)
-                if msg is None:
-                    continue
-                seq["n"] += 1
-                name = f"{seq['n']:012d}-{uuid.uuid4().hex}.msg"
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(msg)
-                tmp.rename(spool / name)
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    def poll(self):
+        msg = self._sock.recv(timeout=0.2)
+        if msg is not None:
+            yield None, msg
 
     @property
     def port(self) -> int | None:
         return self._sock.port if self._sock else None
 
-    def stop(self) -> None:
-        self._stop.set()
+    def close(self) -> None:
         if self._sock is not None:
             self._sock.close()
-            self._sock = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_nanomsg_stream(spark, spool_dir: str,
-                        max_files_per_trigger: int | None = None):
-    """File stream over a NanomsgSpooler's dir: `value string`."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
 
 
 # --------------------------------------------------------------------------

@@ -17,7 +17,7 @@ Spark-first mapping (same spool-bridge rationale as every push source):
   (at-most-once — no acks in the protocol; JetStream adds them but is a
   different protocol layer), matching the reference core-`nats` input's
   delivery guarantee. The subject and reply subject ride the spool
-  FILENAME hex-encoded and surface as `nats_subject` /
+  file's metadata and surface as `nats_subject` /
   `nats_reply_subject` columns, decoded JVM-side.
 - output -> foreachBatch publisher: one pooled connection per partition,
   rows publish as JSON executor-side. The subject supports `${! expr }`
@@ -37,7 +37,8 @@ import socket
 import threading
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import SpoolBridge
 
 _CRLF = b"\r\n"
 
@@ -202,11 +203,14 @@ class NatsClient:
 
 
 @dataclass
-class NatsSpooler:
+class NatsSpooler(SpoolBridge):
     """`nats` input (input.go): subscribe (optionally as a queue-group
     member) and spool each message as one durable file. Core NATS is
     at-most-once — a message the spooler never saw was never delivered;
     everything it did see is durable before the next recv."""
+
+    connector = "nats"
+    META = (("nats_subject", "string"), ("nats_reply_subject", "string"))
 
     host: str
     port: int
@@ -214,12 +218,8 @@ class NatsSpooler:
     spool_dir: str
     queue: str | None = None
     _client: NatsClient | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "NatsSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
         # subscribe + flush BEFORE returning so no publish races it
         client = NatsClient(self.host, self.port)
         client.subscribe(self.subject, queue=self.queue)
@@ -228,57 +228,14 @@ class NatsSpooler:
         # otherwise kill an IDLE subscriber after 10s
         client.sock.settimeout(None)
         self._client = client
-        seq = {"n": 0}
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.recv_msg()
-                except (ConnectionError, OSError, ValueError):
-                    return  # socket closed by stop() or server
-                subject, _sid, reply, payload = got
-                seq["n"] += 1
-                # subject + reply ride the filename hex-encoded ->
-                # nats_subject / nats_reply_subject columns decodable
-                # JVM-side (input.go:200-201 metadata)
-                name = (f"{seq['n']:012d}-{subject.encode().hex()}"
-                        f"-{(reply or '').encode().hex()}-{uuid.uuid4().hex}.msg")
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(payload)
-                tmp.rename(spool / name)
+    def poll(self):
+        subject, _sid, reply, payload = self._client.recv_msg()
+        yield None, payload, subject, reply or None
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
+    def close(self) -> None:
         if self._client is not None:
             self._client.close()  # unblocks the recv loop
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_nats_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over a NatsSpooler's dir: `value string` +
-    `nats_subject` / `nats_reply_subject` (decoded from the filename
-    JVM-side — input.go's metadata fields; reply is NULL when absent)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-([0-9a-f]*)-[0-9a-f]{32}\.msg$"
-    reply = F.decode(F.unhex(F.regexp_extract(fname, pat, 2)), "UTF-8")
-    return (
-        df.withColumn("nats_subject",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("nats_reply_subject", F.when(reply != "", reply))
-    )
 
 
 # --------------------------------------------------------------------------
@@ -901,12 +858,15 @@ def nats_jetstream_sink(host: str, port: int, subject_col: str = "_js_subject",
 
 
 @dataclass
-class JetStreamSpooler:
+class JetStreamSpooler(SpoolBridge):
     """`nats_jetstream` input (input_jetstream.go) as a durable PULL
     consumer: CONSUMER.DURABLE.CREATE, then MSG.NEXT one message at a
     time; +ACK goes to the delivery's `$JS.ACK...` reply subject only
-    AFTER the spool rename (at-least-once — an unacked delivery
+    once the spool file is durable (at-least-once — an unacked delivery
     redelivers after ack_wait, which the server tracks)."""
+
+    connector = "nats_jetstream"
+    META = (("nats_subject", "string"), ("nats_sequence", "long"))
 
     host: str
     port: int
@@ -917,14 +877,9 @@ class JetStreamSpooler:
     deliver: str = "all"       # all | last (input_jetstream.go `deliver`)
     ack_wait_s: float = 30.0
     poll_interval_s: float = 0.05
-    error: str | None = field(default=None, repr=False)
     _client: NatsJsClient | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "JetStreamSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
         client = NatsJsClient(self.host, self.port)
         cfg = {
             "stream_name": self.stream,
@@ -936,40 +891,24 @@ class JetStreamSpooler:
                 **({"filter_subject": self.subject} if self.subject else {}),
             },
         }
-        client.js_api(f"CONSUMER.DURABLE.CREATE.{self.stream}.{self.durable}",
-                      cfg)
+        client.js_api(f"CONSUMER.DURABLE.CREATE.{self.stream}.{self.durable}", cfg)
         self._client = client
-        seq = {"n": 0}
 
-        def run() -> None:
-            next_subj = f"CONSUMER.MSG.NEXT.{self.stream}.{self.durable}"
-            while not self._stop.is_set():
-                try:
-                    status, _h, payload, reply, subject = self._next(
-                        client, next_subj)
-                except (ConnectionError, OSError, ValueError) as e:
-                    if not self._stop.is_set():
-                        self.error = f"{type(e).__name__}: {e}"
-                    return
-                if status.startswith(("404", "408")):  # empty / expired
-                    self._stop.wait(self.poll_interval_s)
-                    continue
-                # stream sequence rides token 6 of the ack subject
-                # ($JS.ACK.<stream>.<consumer>.<delivered>.<sseq>...)
-                toks = (reply or "").split(".")
-                sseq = toks[5] if len(toks) > 5 else "0"
-                seq["n"] += 1
-                name = (f"{seq['n']:012d}-{subject.encode().hex()}"
-                        f"-{int(sseq):020d}-{uuid.uuid4().hex}.msg")
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(b"." + payload)  # 1-byte pad (empty KV values)
-                tmp.rename(spool / name)
-                if reply:  # ack AFTER the durable rename
-                    client.publish(reply, b"+ACK")
+    def poll(self):
+        status, _h, payload, reply, subject = self._next(
+            self._client, f"CONSUMER.MSG.NEXT.{self.stream}.{self.durable}")
+        if status.startswith(("404", "408")):  # empty / expired
+            self.idle(self.poll_interval_s)
+            return
+        # stream sequence rides token 6 of the ack subject
+        # ($JS.ACK.<stream>.<consumer>.<delivered>.<sseq>...)
+        toks = (reply or "").split(".")
+        yield reply, payload, subject, int(toks[5] if len(toks) > 5 else "0")
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    def ack(self, tokens: list) -> None:
+        for reply in tokens:
+            if reply:
+                self._client.publish(reply, b"+ACK")
 
     @staticmethod
     def _next(client: NatsJsClient, next_subj: str):
@@ -991,52 +930,9 @@ class JetStreamSpooler:
             except OSError:
                 pass
 
-    def stop(self) -> None:
-        self._stop.set()
+    def close(self) -> None:
         if self._client is not None:
             self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=2)
-
-
-def read_jetstream_stream(spark, spool_dir: str,
-                          max_files_per_trigger: int | None = None):
-    """File stream over a JetStreamSpooler's dir: `value string` +
-    nats_subject / nats_sequence columns."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-(\d{20})-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("nats_subject",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("nats_sequence",
-                      F.regexp_extract(fname, pat, 2).cast("long"))
-          .withColumn("value", F.expr("substring(value, 2)"))
-    )
-
-
-def read_jetstream_spool_batch(spark, spool_dir: str):
-    """Batch twin of read_jetstream_stream for bounded drains (a fully
-    acked spool IS a complete batch)."""
-    from pyspark.sql import functions as F
-
-    df = (spark.read.format("text").option("wholetext", "true")
-          .load(f"{spool_dir}/*.msg"))
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-(\d{20})-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("nats_subject",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("nats_sequence",
-                      F.regexp_extract(fname, pat, 2).cast("long"))
-          .withColumn("value", F.expr("substring(value, 2)"))
-    )
 
 
 class NatsKvCache:
@@ -1430,11 +1326,14 @@ def nats_os_map(df, host: str, port: int, bucket: str, operation: str,
 
 
 @dataclass
-class NatsOsSpooler:
+class NatsOsSpooler(SpoolBridge):
     """`nats_object_store` input (input_os.go): watch the bucket's
     metadata subjects through a durable consumer; each update fetches the
-    OBJECT and spools it as one message (name/size/chunks ride the
-    filename; deleted markers are skipped). Ack after the rename."""
+    OBJECT and spools it as one message (name/size ride as metadata;
+    deleted markers are acked and skipped). Ack once the file is durable."""
+
+    connector = "nats_object_store"
+    META = (("nats_object_name", "string"), ("nats_object_size", "long"))
 
     host: str
     port: int
@@ -1442,14 +1341,9 @@ class NatsOsSpooler:
     durable: str
     spool_dir: str
     poll_interval_s: float = 0.05
-    error: str | None = field(default=None, repr=False)
     _client: NatsJsClient | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "NatsOsSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
         client = NatsJsClient(self.host, self.port)
         stream = f"OBJ_{self.bucket}"
         client.js_api(f"CONSUMER.DURABLE.CREATE.{stream}.{self.durable}", {
@@ -1458,65 +1352,21 @@ class NatsOsSpooler:
                        "deliver_policy": "all",
                        "filter_subject": f"$O.{self.bucket}.M.>"}})
         self._client = client
-        store = NatsObjectStore(client, self.bucket)
-        seq = {"n": 0}
+        self._store = NatsObjectStore(client, self.bucket)
+        self._next_subj = f"CONSUMER.MSG.NEXT.{stream}.{self.durable}"
 
-        def run() -> None:
-            next_subj = f"CONSUMER.MSG.NEXT.{stream}.{self.durable}"
-            while not self._stop.is_set():
-                try:
-                    status, _h, payload, reply, _s = JetStreamSpooler._next(
-                        client, next_subj)
-                    if status.startswith(("404", "408")):
-                        self._stop.wait(self.poll_interval_s)
-                        continue
-                    meta = json.loads(payload)
-                    if not meta.get("deleted"):
-                        body = store._assemble(meta)
-                        seq["n"] += 1
-                        name = (f"{seq['n']:012d}"
-                                f"-{meta['name'].encode().hex()}"
-                                f"-{int(meta['size']):020d}"
-                                f"-{uuid.uuid4().hex}.msg")
-                        tmp = spool / f".{name}.tmp"
-                        tmp.write_bytes(b"." + body)
-                        tmp.rename(spool / name)
-                    if reply:
-                        client.publish(reply, b"+ACK")
-                except (ConnectionError, OSError, ValueError, KeyError) as e:
-                    if not self._stop.is_set():
-                        self.error = f"{type(e).__name__}: {e}"
-                    return
+    def poll(self):
+        status, _h, payload, reply, _s = JetStreamSpooler._next(self._client, self._next_subj)
+        if status.startswith(("404", "408")):
+            self.idle(self.poll_interval_s)
+            return
+        meta = json.loads(payload)
+        if meta.get("deleted"):
+            self.ack([reply])
+        else:
+            yield reply, self._store._assemble(meta), meta["name"], int(meta["size"])
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=2)
+    ack = JetStreamSpooler.ack
+    close = JetStreamSpooler.close
 
 
-def read_nats_os_stream(spark, spool_dir: str,
-                        max_files_per_trigger: int | None = None):
-    """File stream over a NatsOsSpooler's dir: `value string` +
-    nats_object_name / nats_object_size columns (input_os.go metadata)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-(\d{20})-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("nats_object_name",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("nats_object_size",
-                      F.regexp_extract(fname, pat, 2).cast("long"))
-          .withColumn("value", F.expr("substring(value, 2)"))
-    )

@@ -18,7 +18,7 @@ Spark-first mapping (same spool-bridge rationale as every push source):
   atomic rename, so at-least-once holds into the replayable file source
   (a crash before FIN means nsqd re-delivers with attempts+1 — the
   protocol's contract and the reference's). attempts/id/timestamp ride
-  the spool FILENAME and surface as `nsq_attempts`/`nsq_id`/
+  the spool file's metadata and surface as `nsq_attempts`/`nsq_id`/
   `nsq_timestamp` columns decoded JVM-side.
 - output -> foreachBatch publisher: one connection per partition, rows
   publish as JSON serialized JVM-side (to_json); each PUB waits for its
@@ -39,7 +39,8 @@ import struct
 import threading
 import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import SpoolBridge
 
 _I32 = struct.Struct(">i")
 _MAGIC = b"  V2"
@@ -144,11 +145,14 @@ def parse_nsqd_addr(addr: str) -> tuple[str, int]:
 
 
 @dataclass
-class NsqSpooler:
+class NsqSpooler(SpoolBridge):
     """`nsq` input (input.go): SUB a channel, RDY `max_in_flight`, spool
-    each message as one durable file, FIN only after the atomic rename —
+    each message as one durable file, FIN only once it is durable —
     at-least-once. Messages whose attempts exceed `max_attempts` are
     FINned without spooling (the reference's discard path)."""
+
+    connector = "nsq"
+    META = (("nsq_id", "string"), ("nsq_attempts", "int"), ("nsq_timestamp", "bigint"))
 
     host: str
     port: int
@@ -158,75 +162,31 @@ class NsqSpooler:
     max_in_flight: int = 64
     max_attempts: int = 5
     _client: NsqClient | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "NsqSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+    def connect(self) -> None:
         client = NsqClient(self.host, self.port)
         client.sub(self.topic, self.channel)
         client.rdy(self.max_in_flight)
         client.sock.settimeout(None)  # idle subscriber blocks on push traffic
         self._client = client
-        seq = {"n": 0}
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    ts, attempts, msg_id, body = client.recv_msg()
-                except (ConnectionError, OSError, ValueError):
-                    return  # socket closed by stop() or server gone
-                if attempts > self.max_attempts:
-                    client.fin(msg_id)  # poison message discard (input.go)
-                    client.rdy(self.max_in_flight)
-                    continue
-                seq["n"] += 1
-                name = (f"{seq['n']:012d}-{msg_id.decode('ascii')}"
-                        f"-{attempts:05d}-{ts:020d}-{uuid.uuid4().hex}.msg")
-                tmp = spool / f".{name}.tmp"
-                tmp.write_bytes(body)
-                tmp.rename(spool / name)
-                try:
-                    client.fin(msg_id)  # ack AFTER durability
-                    # RDY is a decrementing allowance (spec: the server
-                    # counts down per delivery) — refresh it so the
-                    # subscription never stalls at zero
-                    client.rdy(self.max_in_flight)
-                except (ConnectionError, OSError):
-                    return
+    def poll(self):
+        ts, attempts, msg_id, body = self._client.recv_msg()
+        if attempts > self.max_attempts:
+            self.ack([msg_id])  # poison message discard (input.go)
+        else:
+            yield msg_id, body, msg_id.decode("ascii"), attempts, ts
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    def ack(self, tokens: list) -> None:
+        for msg_id in tokens:
+            self._client.fin(msg_id)
+        # RDY is a decrementing allowance (spec: the server counts down
+        # per delivery) — refresh it so the subscription never stalls
+        self._client.rdy(self.max_in_flight)
 
-    def stop(self) -> None:
-        self._stop.set()
+    def close(self) -> None:
         if self._client is not None:
             self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_nsq_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over an NsqSpooler's dir: `value string` +
-    `nsq_id`/`nsq_attempts`/`nsq_timestamp` (decoded from the filename
-    JVM-side — input.go:248-251 metadata)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]{16})-(\d{5})-(\d{20})-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("nsq_id", F.regexp_extract(fname, pat, 1))
-          .withColumn("nsq_attempts", F.regexp_extract(fname, pat, 2).cast("int"))
-          .withColumn("nsq_timestamp", F.regexp_extract(fname, pat, 3).cast("bigint"))
-    )
 
 
 # --------------------------------------------------------------------------

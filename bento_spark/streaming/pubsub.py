@@ -19,7 +19,7 @@ Spark-first mapping (same spool-bridge rationale as every pull source):
 - input  -> PubSubSpooler pulls and spools each message BEFORE
   acknowledge (ack-after-durability = at-least-once: an un-acked message
   re-delivers after the ack deadline, the Pub/Sub contract). messageId
-  rides the spool FILENAME as `pubsub_message_id`.
+  rides the spool file's metadata as `pubsub_message_id`.
 - output -> foreachBatch publish; the interpolated topic arrives as a
   COLUMN, data is base64 of the JVM-serialized JSON row.
 """
@@ -30,9 +30,9 @@ import base64
 import json
 import threading
 import time
-import uuid
-from dataclasses import dataclass, field
-from pathlib import Path
+from dataclasses import dataclass
+
+from bento_spark.streaming.spool import SpoolBridge
 
 
 # --------------------------------------------------------------------------
@@ -193,12 +193,15 @@ class PubSubClient:
 
 
 @dataclass
-class PubSubSpooler:
+class PubSubSpooler(SpoolBridge):
     """`gcp_pubsub` input (input_pubsub.go): pull-loop the subscription
     and spool each message as one durable file; acknowledge fires only
-    AFTER the atomic rename — at-least-once via the ack deadline.
+    once the batch is durable — at-least-once via the ack deadline.
     `create_subscription` mirrors the reference's create_subscription
     object (enabled + topic)."""
+
+    connector = "gcp_pubsub"
+    META = (("pubsub_message_id", "string"),)
 
     endpoint: str
     project: str
@@ -207,80 +210,30 @@ class PubSubSpooler:
     credentials: dict | None = None
     max_messages: int = 10
     create_topic: str | None = None
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "PubSubSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        client = PubSubClient(self.endpoint, credentials=self.credentials)
+    def connect(self) -> None:
+        self._client = PubSubClient(self.endpoint, credentials=self.credentials)
         if self.create_topic:
-            client.create_subscription(self.project, self.subscription,
-                                       self.create_topic)
-        seq = {"n": 0}
+            self._client.create_subscription(self.project, self.subscription,
+                                             self.create_topic)
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.pull(self.project, self.subscription,
-                                      max_messages=self.max_messages)
-                except (ConnectionError, OSError):
-                    if self._stop.wait(0.5):
-                        return
-                    continue
-                if not got:
-                    self._stop.wait(0.05)
-                    continue
-                try:
-                    acks = []
-                    for rm in got:
-                        msg = rm.get("message") or {}
-                        data = base64.b64decode(msg.get("data", ""))
-                        mid = msg.get("messageId", "")
-                        seq["n"] += 1
-                        name = (f"{seq['n']:012d}-{mid.encode().hex()}"
-                                f"-{uuid.uuid4().hex}.msg")
-                        tmp = spool / f".{name}.tmp"
-                        tmp.write_bytes(data)
-                        tmp.rename(spool / name)
-                        acks.append(rm["ackId"])
-                except Exception as e:  # disk/decode faults: surface loudly
-                    import sys
+    def poll(self):
+        got = self.request(self._client.pull, self.project, self.subscription,
+                           max_messages=self.max_messages)
+        if got is None:
+            return
+        if not got:
+            self.idle(0.05)
+        for rm in got:
+            msg = rm.get("message") or {}
+            yield (rm["ackId"], base64.b64decode(msg.get("data", "")),
+                   msg.get("messageId") or None)
 
-                    self.error = f"gcp_pubsub: {e}"
-                    print(self.error, file=sys.stderr)
-                    return
-                try:
-                    client.acknowledge(self.project, self.subscription, acks)
-                except (ConnectionError, OSError):
-                    pass  # ack deadline re-delivers; dedupe downstream
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_pubsub_stream(spark, spool_dir: str,
-                       max_files_per_trigger: int | None = None):
-    """File stream over a PubSubSpooler's dir: `value string` +
-    `pubsub_message_id` decoded from the filename JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-[0-9a-f]{32}\.msg$"
-    mid = F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8")
-    return df.withColumn("pubsub_message_id", F.when(mid != "", mid))
+    def ack(self, tokens: list) -> None:
+        try:
+            self._client.acknowledge(self.project, self.subscription, tokens)
+        except ConnectionError:
+            pass  # the ack deadline re-delivers
 
 
 # --------------------------------------------------------------------------

@@ -32,9 +32,9 @@ Spark-first mapping (same spool-bridge rationale as every push source):
 - input  -> PulsarSpooler subscribes (SUBSCRIBE/FLOW/MESSAGE/ACK) and
   persists each message as a durable spool file BEFORE acking, so
   unacked messages redeliver on reconnect: at-least-once, the reference
-  input's guarantee. Each spool file is a JSON envelope; payload +
-  pulsar_* metadata columns are extracted JVM-side with from_json — no
-  Python touches rows after the driver-side control-plane bridge.
+  input's guarantee. The pulsar_* metadata rides the spool file and
+  decodes JVM-side (streaming/spool.py) — no Python touches rows after
+  the driver-side control-plane bridge.
 - output -> foreachBatch producer: rows render to JSON JVM-side
   (to_json), interpolated key / ordering_key arrive as pre-computed
   COLUMNS, one connection per partition, sends pipelined with a receipt
@@ -49,17 +49,13 @@ routes by hash of the key. The mini broker implements shared round-robin
 
 from __future__ import annotations
 
-import base64
-import json
 import re
 import socket
 import struct
 import threading
 import time
-import uuid
 import zlib
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from bento_spark.operators.protobuf_codec import (
     _tag,
@@ -68,6 +64,7 @@ from bento_spark.operators.protobuf_codec import (
     parse_proto,
 )
 from bento_spark.streaming.kafka_wire import crc32c
+from bento_spark.streaming.spool import SpoolBridge
 
 _MAGIC = b"\x0e\x01"
 
@@ -536,21 +533,23 @@ class Consumer:
 # input bridge
 # ---------------------------------------------------------------------------
 
-_ENVELOPE_DDL = (
-    "payload_b64 STRING, topic STRING, message_id STRING, key STRING, "
-    "ordering_key STRING, publish_time_ms BIGINT, event_time_ms BIGINT, "
-    "redelivery_count INT, producer_name STRING, properties MAP<STRING,STRING>"
-)
-
-
 @dataclass
-class PulsarSpooler:
+class PulsarSpooler(SpoolBridge):
     """`pulsar` input (input.go): subscribe to one or more topics (or a
     topics_pattern resolved via GetTopicsOfNamespace against the pattern's
-    namespace) and spool each message as one durable JSON-envelope file.
-    The ACK is sent only AFTER the atomic rename — a crash between
-    delivery and ack leaves the message unacked, so the broker redelivers:
-    at-least-once, the reference's guarantee."""
+    namespace), one receive thread per topic, and spool each message as
+    one durable file. The ACK is sent only once the file is durable — a
+    crash between delivery and ack leaves the message unacked, so the
+    broker redelivers: at-least-once, the reference's guarantee."""
+
+    connector = "pulsar"
+    META = (
+        ("pulsar_topic", "string"), ("pulsar_message_id", "string"),
+        ("pulsar_key", "string"), ("pulsar_ordering_key", "string"),
+        ("pulsar_publish_time_unix", "bigint"), ("pulsar_redelivery_count", "int"),
+        ("pulsar_event_time_unix", "bigint"), ("pulsar_producer_name", "string"),
+        ("pulsar_properties", "map<string,string>"),
+    )
 
     host: str
     port: int
@@ -560,14 +559,10 @@ class PulsarSpooler:
     sub_type: str = "shared"
     topics_pattern: str | None = None
     token: str | None = None
-    _clients: list[tuple[PulsarClient, Consumer]] = field(
-        default_factory=list, repr=False)
-    _threads: list[threading.Thread] = field(default_factory=list, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
+    _clients: list[PulsarClient] = field(default_factory=list, repr=False)
 
     def start(self) -> "PulsarSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        self.open_spool()
         topics = list(self.topics)
         if self.topics_pattern:
             # pattern namespace = everything before the final path segment
@@ -584,95 +579,38 @@ class PulsarSpooler:
         if not topics:
             raise ValueError("pulsar input: no topics (set topics or "
                              "topics_pattern matching existing topics)")
-        seq = {"n": 0}
-        lock = threading.Lock()
         for topic in topics:
             client = PulsarClient(self.host, self.port, token=self.token)
             consumer = Consumer(client, topic, self.subscription,
                                 sub_type=self.sub_type)
             client.sock.settimeout(None)  # idle subscriber blocks on push
-            self._clients.append((client, consumer))
-            t = threading.Thread(
-                target=self._run, args=(consumer, spool, seq, lock), daemon=True)
-            t.start()
-            self._threads.append(t)
+            self._clients.append(client)
+            self.spawn(self._run, consumer)
         return self
 
-    def _run(self, consumer: Consumer, spool: Path, seq: dict,
-             lock: threading.Lock) -> None:
-        while not self._stop.is_set():
-            try:
-                msg = consumer.receive()
-            except (ConnectionError, OSError, ValueError):
-                return  # socket closed by stop() or broker
+    def _run(self, consumer: Consumer) -> None:
+        while not self.stopping:
+            msg = consumer.receive()
             meta = msg.metadata
             smm = msg.single_meta or {}
             props = {kv["key"]: kv["value"]
-                     for kv in (smm.get("properties") or meta.get("properties")
-                                or [])}
-            env = {
-                "payload_b64": base64.b64encode(msg.payload).decode(),
-                "topic": msg.topic,
-                "message_id": f"{msg.message_id[0]}:{msg.message_id[1]}",
-                "key": smm.get("partition_key") or meta.get("partition_key"),
-                "ordering_key": (
-                    (smm.get("ordering_key") or meta.get("ordering_key")
-                     or b"").decode("utf-8", "replace") or None),
-                "publish_time_ms": int(meta.get("publish_time") or 0),
-                "event_time_ms": int(smm.get("event_time")
-                                     or meta.get("event_time") or 0) or None,
-                "redelivery_count": msg.redelivery_count,
-                "producer_name": meta.get("producer_name"),
-                "properties": props,
-            }
-            with lock:
-                seq["n"] += 1
-                name = f"{seq['n']:012d}-{uuid.uuid4().hex}.msg"
-            tmp = spool / f".{name}.tmp"
-            tmp.write_text(json.dumps(env))
-            tmp.rename(spool / name)
-            # durable BEFORE ack -> at-least-once
-            try:
-                consumer.ack(msg.message_id)
-            except (ConnectionError, OSError):
-                return
+                     for kv in (smm.get("properties") or meta.get("properties") or [])}
+            event_ms = int(smm.get("event_time") or meta.get("event_time") or 0)
+            self.put(
+                msg.payload, msg.topic, f"{msg.message_id[0]}:{msg.message_id[1]}",
+                smm.get("partition_key") or meta.get("partition_key"),
+                (smm.get("ordering_key") or meta.get("ordering_key")
+                 or b"").decode("utf-8", "replace") or None,
+                int(meta.get("publish_time") or 0) // 1000, msg.redelivery_count,
+                event_ms // 1000 if event_ms else None, meta.get("producer_name"),
+                props)
+            self.sync()
+            consumer.ack(msg.message_id)
 
-    def stop(self) -> None:
-        self._stop.set()
-        for client, _ in self._clients:
+    def close(self) -> None:
+        for client in self._clients:
             client.close()  # unblocks the recv loops
         self._clients.clear()
-        for t in self._threads:
-            t.join(timeout=5)
-        self._threads.clear()
-
-
-def read_pulsar_stream(spark, spool_dir: str,
-                       max_files_per_trigger: int | None = None):
-    """File stream over a PulsarSpooler's dir: JSON envelopes parsed
-    JVM-side (from_json, codegen) into `value` plus the reference's
-    pulsar_* metadata columns (input.go:267-284)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    env = F.from_json(F.col("value"), _ENVELOPE_DDL)
-    return df.select(
-        F.decode(F.unbase64(env["payload_b64"]), "UTF-8").alias("value"),
-        env["topic"].alias("pulsar_topic"),
-        env["message_id"].alias("pulsar_message_id"),
-        env["key"].alias("pulsar_key"),
-        env["ordering_key"].alias("pulsar_ordering_key"),
-        (env["publish_time_ms"] / F.lit(1000)).cast("bigint")
-            .alias("pulsar_publish_time_unix"),
-        env["redelivery_count"].alias("pulsar_redelivery_count"),
-        (env["event_time_ms"] / F.lit(1000)).cast("bigint")
-            .alias("pulsar_event_time_unix"),
-        env["producer_name"].alias("pulsar_producer_name"),
-        env["properties"].alias("pulsar_properties"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -42,9 +42,9 @@ import json
 import socket
 import threading
 import time
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import SpoolBridge
 
 _CRLF = b"\r\n"
 
@@ -217,125 +217,96 @@ def parse_redis_url(url: str) -> tuple[str, int]:
 
 
 @dataclass
-class _SpoolerBase:
-    host: str
-    port: int
-    spool_dir: str
-    _thread: "threading.Thread | None" = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    _client: "RedisClient | None" = field(default=None, repr=False)
-
-    def _spool_path(self) -> Path:
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        return spool
-
-    @staticmethod
-    def _write(spool: Path, seq: int, tag: str, payload: bytes) -> None:
-        name = f"{seq:012d}-{tag.encode().hex()}-{uuid.uuid4().hex}.msg"
-        tmp = spool / f".{name}.tmp"
-        tmp.write_bytes(payload)
-        tmp.rename(spool / name)
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._client is not None:
-            self._client.close()
-            self._client = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-@dataclass
-class RedisListSpooler(_SpoolerBase):
+class RedisListSpooler(SpoolBridge):
     """`redis_list` input (input_list.go): BLPOP/BRPOP loop -> spool. The
     pop is destructive, so a crash between pop and rename loses at most
     the one in-flight message — the reference's own window."""
 
+    connector = "redis_list"
+    META = (("redis_key", "string"),)
+
+    host: str
+    port: int
+    spool_dir: str
     key: str = ""
     command: str = "blpop"  # or brpop
+    _client: "RedisClient | None" = field(default=None, repr=False)
 
-    def start(self) -> "RedisListSpooler":
+    def connect(self) -> None:
         if self.command not in ("blpop", "brpop"):
             raise ValueError(f"redis_list command must be blpop|brpop, got {self.command!r}")
-        spool = self._spool_path()
-        client = RedisClient(self.host, self.port)
-        self._client = client
-        seq = {"n": 0}
+        self._client = RedisClient(self.host, self.port)
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    # 1s timeout so stop() is honored promptly
-                    got = client.cmd(self.command.upper(), self.key, 1)
-                except (ConnectionError, OSError, RedisError):
-                    return
-                if got is None:
-                    continue  # timeout tick
-                _key, payload = got
-                seq["n"] += 1
-                self._write(spool, seq["n"], self.key, payload)
+    def poll(self):
+        # 1s timeout so stop() is honored promptly
+        got = self._client.cmd(self.command.upper(), self.key, 1)
+        if got is not None:
+            _key, payload = got
+            yield None, payload, self.key
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    def close(self) -> None:
+        if self._client is not None:
+            self._client.close()
 
 
 @dataclass
-class RedisPubSubSpooler(_SpoolerBase):
+class RedisPubSubSpooler(SpoolBridge):
     """`redis_pubsub` input (input_pubsub.go): SUBSCRIBE (or PSUBSCRIBE
     with `use_patterns`) -> spool. Fire-and-forget by protocol (redis
     pub/sub has no delivery guarantee), like the reference input."""
 
+    connector = "redis_pubsub"
+    META = (("redis_channel", "string"),)
+
+    host: str
+    port: int
+    spool_dir: str
     channels: list[str] = field(default_factory=list)
     use_patterns: bool = False
+    _client: "RedisClient | None" = field(default=None, repr=False)
+    close = RedisListSpooler.close
 
-    def start(self) -> "RedisPubSubSpooler":
-        spool = self._spool_path()
+    def connect(self) -> None:
         client = RedisClient(self.host, self.port)
         client.subscribe(list(self.channels), patterns=self.use_patterns)
         # block forever on push traffic — the connect-time timeout would
         # otherwise kill an IDLE subscriber after 10s
         client.sock.settimeout(None)
         self._client = client
-        seq = {"n": 0}
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.get_message()
-                except (ConnectionError, OSError, ValueError):
-                    return
-                if got is None:
-                    continue
-                channel, payload = got
-                seq["n"] += 1
-                self._write(spool, seq["n"], channel, payload)
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    def poll(self):
+        got = self._client.get_message()
+        if got is not None:
+            channel, payload = got
+            yield None, payload, channel
 
 
 @dataclass
-class RedisStreamsSpooler(_SpoolerBase):
+class RedisStreamsSpooler(SpoolBridge):
     """`redis_streams` input (input_streams.go): XREADGROUP consumer-group
     loop; each entry's `body_key` field is the message body, remaining
-    fields ride as JSON metadata in the spool file's first line. XACK
-    fires only AFTER the spool rename (input_streams.go:241 acks after
-    handoff) — the broker re-delivers anything unacked via the PEL, so
-    at-least-once holds into the replayable file source."""
+    fields ride as metadata. XACK fires only once the entries are durable
+    (input_streams.go:241 acks after handoff) — the broker re-delivers
+    anything unacked via the PEL, so at-least-once holds into the
+    replayable file source."""
 
+    connector = "redis_streams"
+    META = (("redis_stream", "string"), ("redis_id", "string"),
+            ("redis_meta", "map<string,string>"))
+
+    host: str
+    port: int
+    spool_dir: str
     streams: list[str] = field(default_factory=list)
     body_key: str = "body"
     consumer_group: str = "bento_spark"
     client_id: str = "bento_spark_consumer"
     start_from_oldest: bool = True
     limit: int = 10
+    _client: "RedisClient | None" = field(default=None, repr=False)
+    close = RedisListSpooler.close
 
-    def start(self) -> "RedisStreamsSpooler":
-        spool = self._spool_path()
+    def connect(self) -> None:
         client = RedisClient(self.host, self.port)
         offset = "0" if self.start_from_oldest else "$"
         for s in self.streams:
@@ -345,82 +316,26 @@ class RedisStreamsSpooler(_SpoolerBase):
                 if "BUSYGROUP" not in str(e):  # already exists is fine
                     raise
         self._client = client
-        seq = {"n": 0}
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    got = client.cmd(
-                        "XREADGROUP", "GROUP", self.consumer_group, self.client_id,
-                        "COUNT", self.limit, "BLOCK", 1000,
-                        "STREAMS", *self.streams, *[">"] * len(self.streams))
-                except (ConnectionError, OSError, RedisError):
-                    return
-                if not got:
-                    continue  # block timeout tick
-                acks: dict[str, list[bytes]] = {}
-                for stream_name, entries in got:
-                    sname = stream_name.decode()
-                    for entry_id, kv in entries:
-                        fields = {kv[i].decode(): kv[i + 1] for i in range(0, len(kv), 2)}
-                        body = fields.pop(self.body_key, b"")
-                        meta = {k: v.decode(errors="replace") for k, v in fields.items()}
-                        seq["n"] += 1
-                        # first line = JSON envelope (stream, id, metadata),
-                        # rest = raw body — parsed back JVM-side
-                        head = json.dumps({"stream": sname,
-                                           "id": entry_id.decode(), "meta": meta})
-                        self._write(spool, seq["n"], sname,
-                                    head.encode() + b"\n" + body)
-                        acks.setdefault(sname, []).append(entry_id)
-                for sname, ids in acks.items():
-                    try:
-                        client.cmd("XACK", sname, self.consumer_group, *ids)
-                    except (ConnectionError, OSError, RedisError):
-                        return
+    def poll(self):
+        got = self._client.cmd(
+            "XREADGROUP", "GROUP", self.consumer_group, self.client_id,
+            "COUNT", self.limit, "BLOCK", 1000,
+            "STREAMS", *self.streams, *[">"] * len(self.streams))
+        for stream_name, entries in got or ():
+            sname = stream_name.decode()
+            for entry_id, kv in entries:
+                fields = {kv[i].decode(): kv[i + 1] for i in range(0, len(kv), 2)}
+                body = fields.pop(self.body_key, b"")
+                meta = {k: v.decode(errors="replace") for k, v in fields.items()}
+                yield (sname, entry_id), body, sname, entry_id.decode(), meta
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-
-def read_redis_spool_stream(spark, spool_dir: str, tag_col: str,
-                            max_files_per_trigger: int | None = None):
-    """File stream over a list/pubsub spooler dir: `value string` plus the
-    hex-filename tag (source key or channel) decoded JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    return df.withColumn(
-        tag_col,
-        F.decode(F.unhex(F.regexp_extract(
-            F.input_file_name(), r"/\d{12}-([0-9a-f]*)-[0-9a-f]{32}\.msg$", 1)), "UTF-8"),
-    )
-
-
-def read_redis_streams_stream(spark, spool_dir: str,
-                              max_files_per_trigger: int | None = None):
-    """File stream over a RedisStreamsSpooler dir: splits the JSON
-    envelope line from the body JVM-side -> columns (value, redis_stream,
-    redis_id, redis_meta map<string,string>)."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    head = F.substring_index(F.col("value"), "\n", 1)
-    body = F.expr("substring(value, length(substring_index(value, '\\n', 1)) + 2)")
-    env = F.from_json(head, "stream string, id string, meta map<string,string>")
-    return df.select(
-        body.alias("value"),
-        env["stream"].alias("redis_stream"),
-        env["id"].alias("redis_id"),
-        env["meta"].alias("redis_meta"),
-    )
+    def ack(self, tokens: list) -> None:
+        acks: dict[str, list[bytes]] = {}
+        for sname, entry_id in tokens:
+            acks.setdefault(sname, []).append(entry_id)
+        for sname, ids in acks.items():
+            self._client.cmd("XACK", sname, self.consumer_group, *ids)
 
 
 def read_redis_scan(spark, host: str, port: int, match: str = "*",

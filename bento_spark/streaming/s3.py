@@ -24,7 +24,7 @@ Spark-first mapping:
   each object as a durable file, or (b) long-polls an SQS queue for S3
   event notifications and fetches exactly the notified objects —
   DeleteMessage/DeleteObject fire only AFTER the atomic spool rename
-  (at-least-once). Object key/bucket/mtime ride the spool FILENAME and
+  (at-least-once). Object key/bucket/mtime ride the spool file's metadata and
   surface as s3_key/s3_bucket/s3_last_modified_unix columns JVM-side.
 - output -> one PutObject per row; the interpolated object path arrives
   as a pre-computed COLUMN (Catalyst-rendered, the repo's interpolation
@@ -46,11 +46,10 @@ import json
 import threading
 import time
 import urllib.parse
-import uuid
-from dataclasses import dataclass, field
-from pathlib import Path
+from dataclasses import dataclass
 
 from bento_spark.streaming.sqs import sigv4_signature
+from bento_spark.streaming.spool import SpoolBridge
 
 _SAFE = "-_.~"  # RFC 3986 unreserved minus alnum (quote() keeps alnum)
 
@@ -293,13 +292,17 @@ def _extract_paths(obj, path: str) -> list:
 
 
 @dataclass
-class S3Spooler:
+class S3Spooler(SpoolBridge):
     """`aws_s3` input (input_s3.go): either one pass over the bucket
     listing (plain mode — the reference consumes the listing then stops;
     `finished` flips True) or an SQS-notification loop (`sqs_queue_url`
     set): each notified object is fetched and spooled as one durable
     file; DeleteObject (delete_objects: true) / DeleteMessage fire only
-    AFTER the atomic rename — at-least-once."""
+    once the files are durable — at-least-once."""
+
+    connector = "aws_s3"
+    META = (("s3_bucket", "string"), ("s3_key", "string"),
+            ("s3_last_modified_unix", "bigint"))
 
     endpoint: str
     bucket: str
@@ -316,153 +319,68 @@ class S3Spooler:
     sqs_bucket_path: str = "Records.*.s3.bucket.name"
     sqs_wait_time_s: int = 1
     sqs_max_messages: int = 10
-    finished: bool = field(default=False, repr=False)
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def _spool_object(self, spool: Path, client: S3Client, seq: dict,
-                      bucket: str, key: str, lm_unix: int) -> None:
-        body, _ = client.get_object(bucket, key)
-        seq["n"] += 1
-        name = (f"{seq['n']:012d}-{bucket.encode().hex()}-{key.encode().hex()}"
-                f"-{lm_unix:020d}-{uuid.uuid4().hex}.msg")
-        tmp = spool / f".{name}.tmp"
-        # 1-byte pad: Spark's text source emits NO row for a 0-byte file,
-        # so empty objects would silently vanish (same fix as kafka_wire)
-        tmp.write_bytes(b"." + body)
-        tmp.rename(spool / name)
-        if self.delete_objects:
-            try:
-                client.delete_object(bucket, key)
-            except (ConnectionError, OSError):
-                pass  # object re-lists / notification re-delivers
+    @property
+    def finite(self) -> bool:
+        return not self.sqs_queue_url
 
-    def start(self) -> "S3Spooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        client = S3Client(self.endpoint, self.access_key, self.secret_key,
-                          region=self.region)
-        seq = {"n": 0}
+    def connect(self) -> None:
+        from bento_spark.streaming.sqs import SqsClient
 
-        def run_listing() -> None:
-            import sys
+        self._client = S3Client(self.endpoint, self.access_key, self.secret_key,
+                                region=self.region)
+        self._sqs = SqsClient(self.sqs_endpoint or self.endpoint, self.access_key,
+                              self.secret_key, region=self.region)
 
-            try:
-                for obj in client.list_objects(self.bucket, prefix=self.prefix):
-                    if self._stop.is_set():
-                        return
-                    self._spool_object(spool, client, seq, self.bucket,
-                                       obj["key"], obj["last_modified_unix"])
-            except Exception as e:  # surface, don't vanish
-                self.error = f"aws_s3: {e}"
-                print(self.error, file=sys.stderr)
-            finally:
-                self.finished = True
+    def _object(self, bucket: str, key: str, lm_unix: int, receipt: str | None = None):
+        body, _ = self._client.get_object(bucket, key)
+        return (bucket, key, receipt), body, bucket, key, lm_unix
 
-        def run_sqs() -> None:
-            import sys
-
-            from bento_spark.streaming.sqs import SqsClient
-
-            sqs = SqsClient(self.sqs_endpoint or self.endpoint,
-                            self.access_key, self.secret_key,
-                            region=self.region)
-            while not self._stop.is_set():
-                try:
-                    msgs = sqs.receive_message(
-                        self.sqs_queue_url, max_messages=self.sqs_max_messages,
-                        wait_time_s=self.sqs_wait_time_s)
-                except (ConnectionError, OSError):
-                    if self._stop.wait(0.5):
-                        return
-                    continue
-                if not msgs:
-                    self._stop.wait(0.05)
-                    continue
-                try:
-                    for m in msgs:
-                        body = json.loads(m.get("Body", "{}"))
-                        keys = [str(k) for k in
-                                _extract_paths(body, self.sqs_key_path)]
-                        buckets = [str(b) for b in
-                                   _extract_paths(body, self.sqs_bucket_path)]
-                        for i, key in enumerate(keys):
-                            bkt = buckets[i] if i < len(buckets) else self.bucket
-                            # notification keys are percent-encoded
-                            # (input_s3.go:500 url.QueryUnescape)
-                            key = urllib.parse.unquote_plus(key)
-                            try:
-                                self._spool_object(spool, client, seq, bkt,
-                                                   key, 0)
-                            except NoSuchKeyError:
-                                continue  # deleted before we fetched it
-                        try:
-                            sqs.delete_message(self.sqs_queue_url,
-                                               m["ReceiptHandle"])
-                        except (ConnectionError, OSError, KeyError):
-                            pass  # visibility timeout re-delivers
-                except Exception as e:
-                    self.error = f"aws_s3: {e}"
-                    print(self.error, file=sys.stderr)
+    def poll(self):
+        if not self.sqs_queue_url:
+            self.finish()
+            for obj in self._client.list_objects(self.bucket, prefix=self.prefix):
+                if self.stopping:
                     return
+                yield self._object(self.bucket, obj["key"], obj["last_modified_unix"])
+            return
+        msgs = self.request(self._sqs.receive_message, self.sqs_queue_url,
+                            max_messages=self.sqs_max_messages,
+                            wait_time_s=self.sqs_wait_time_s)
+        if msgs is None:
+            return
+        if not msgs:
+            self.idle(0.05)
+        for m in msgs:
+            body = json.loads(m.get("Body", "{}"))
+            keys = [str(k) for k in _extract_paths(body, self.sqs_key_path)]
+            buckets = [str(b) for b in _extract_paths(body, self.sqs_bucket_path)]
+            found = []
+            for i, key in enumerate(keys):
+                bkt = buckets[i] if i < len(buckets) else self.bucket
+                # notification keys are percent-encoded
+                # (input_s3.go:500 url.QueryUnescape)
+                try:
+                    found.append(self._object(bkt, urllib.parse.unquote_plus(key), 0))
+                except NoSuchKeyError:
+                    continue  # deleted before we fetched it
+            if not found:
+                self._sqs.delete_message(self.sqs_queue_url, m["ReceiptHandle"])
+                continue
+            # the message is deleted with its last object
+            (bkt, key, _), *rest = found[-1]
+            found[-1] = ((bkt, key, m["ReceiptHandle"]), *rest)
+            yield from found
 
-        target = run_sqs if self.sqs_queue_url else run_listing
-        self._thread = threading.Thread(target=target, daemon=True)
-        self._thread.start()
-        return self
-
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        """Plain-listing mode helper: block until the single listing pass
-        completes (the reference's consume-then-stop contract)."""
-        deadline = time.monotonic() + timeout
-        while time.monotonic() < deadline and not self.finished:
-            time.sleep(0.02)
-        return self.finished
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def _decorate_s3_spool(df):
-    """Strip the 1-byte pad and decode s3_key / s3_bucket /
-    s3_last_modified_unix from the spool FILENAME, all JVM-side (the
-    reference's metadata surface, input_s3.go:735-739)."""
-    from pyspark.sql import functions as F
-
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-([0-9a-f]*)-(\d{20})-[0-9a-f]{32}\.msg$"
-    return (
-        df.withColumn("value", F.expr("substring(value, 2)"))
-          .withColumn("s3_bucket",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8"))
-          .withColumn("s3_key",
-                      F.decode(F.unhex(F.regexp_extract(fname, pat, 2)), "UTF-8"))
-          .withColumn("s3_last_modified_unix",
-                      F.regexp_extract(fname, pat, 3).cast("bigint"))
-    )
-
-
-def read_s3_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over an S3Spooler's dir: `value string` + s3_key /
-    s3_bucket / s3_last_modified_unix columns."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    return _decorate_s3_spool(df)
-
-
-def read_s3_spool_batch(spark, spool_dir: str):
-    """Batch twin of read_s3_stream for bounded listing-mode consumption
-    (the reference's plain aws_s3 input reads the listing once and stops,
-    so a finished spool IS a complete batch)."""
-    df = (spark.read.format("text").option("wholetext", "true")
-          .load(f"{spool_dir}/*.msg"))
-    return _decorate_s3_spool(df)
+    def ack(self, tokens: list) -> None:
+        for bucket, key, receipt in tokens:
+            try:
+                if self.delete_objects:
+                    self._client.delete_object(bucket, key)
+                if receipt is not None:
+                    self._sqs.delete_message(self.sqs_queue_url, receipt)
+            except OSError:
+                pass  # the object re-lists / the notification re-delivers
 
 
 # --------------------------------------------------------------------------

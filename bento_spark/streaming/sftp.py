@@ -39,8 +39,7 @@ import stat as stat_mod
 import struct
 import threading
 import time
-import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from pathlib import Path
 
 from bento_spark.streaming.ssh_transport import (
@@ -49,6 +48,7 @@ from bento_spark.streaming.ssh_transport import (
     SshServerConn,
     sp,
 )
+from bento_spark.streaming.spool import SpoolBridge
 
 SSH_FXP_INIT, SSH_FXP_VERSION = 1, 2
 SSH_FXP_OPEN, SSH_FXP_CLOSE, SSH_FXP_READ, SSH_FXP_WRITE = 3, 4, 5, 6
@@ -325,11 +325,14 @@ def parse_sftp_address(address: str) -> tuple[str, int]:
 
 
 @dataclass
-class SftpSpooler:
+class SftpSpooler(SpoolBridge):
     """`sftp` input (input.go): resolve the path globs, download each
-    file into the spool, optionally delete it AFTER the durable rename
-    (at-least-once). Watcher mode re-polls, skipping young files
+    file into the spool, optionally delete it once the spool file is
+    durable (at-least-once). Watcher mode re-polls, skipping young files
     (minimum_age) and (name, mtime, size) triples already consumed."""
+
+    connector = "sftp"
+    META = (("sftp_path", "string"),)
 
     host: str
     port: int
@@ -342,94 +345,41 @@ class SftpSpooler:
     poll_interval_s: float = 1.0
     minimum_age_s: float = 0.0
     private_key_pem: str | None = None
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _done: threading.Event = field(default_factory=threading.Event, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
-    error: Exception | None = None
 
-    def start(self) -> "SftpSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        client = SftpClient(self.host, self.port, self.username,
-                            self.password,
-                            private_key_pem=self.private_key_pem)
-        seen: set[tuple[str, int, int]] = set()
-        seq = {"n": 0}
+    @property
+    def finite(self) -> bool:
+        return not self.watcher
 
-        def one_pass() -> None:
-            for pattern in self.paths:
-                for path in client.glob(pattern):
-                    attrs = client.stat(path)
-                    key = (path, int(attrs.get("mtime", 0)),
-                           int(attrs.get("size", 0)))
-                    if key in seen:
-                        continue
-                    if self.watcher and self.minimum_age_s > 0:
-                        if time.time() - attrs.get("mtime", 0) \
-                                < self.minimum_age_s:
-                            continue  # young file: retry next poll
-                    body = client.read_file(path)
-                    seen.add(key)
-                    seq["n"] += 1
-                    name = (f"{seq['n']:012d}-{path.encode().hex()}"
-                            f"-{uuid.uuid4().hex}.msg")
-                    tmp = spool / f".{name}.tmp"
-                    tmp.write_bytes(body)
-                    tmp.rename(spool / name)
-                    if self.delete_on_finish:
-                        client.remove(path)
+    def connect(self) -> None:
+        self._client = SftpClient(self.host, self.port, self.username, self.password,
+                                  private_key_pem=self.private_key_pem)
+        self._seen: set[tuple[str, int, int]] = set()
+        self._first = True
 
-        def run() -> None:
-            try:
-                one_pass()
-                while self.watcher and not self._stop.is_set():
-                    if self._stop.wait(self.poll_interval_s):
-                        break
-                    one_pass()
-            except Exception as e:
-                self.error = e
-            finally:
-                try:
-                    client.close_session()
-                except OSError:
-                    pass
-                self._done.set()
+    def poll(self):
+        if not self.watcher:
+            self.finish()
+        elif not self._first and self.idle(self.poll_interval_s):
+            return
+        self._first = False
+        for pattern in self.paths:
+            for path in self._client.glob(pattern):
+                attrs = self._client.stat(path)
+                key = (path, int(attrs.get("mtime", 0)), int(attrs.get("size", 0)))
+                if key in self._seen:
+                    continue
+                if self.watcher and time.time() - attrs.get("mtime", 0) < self.minimum_age_s:
+                    continue  # young file: retry next poll
+                body = self._client.read_file(path)
+                self._seen.add(key)
+                yield path, body, path
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    def ack(self, tokens: list) -> None:
+        for path in tokens if self.delete_on_finish else ():
+            self._client.remove(path)
 
-    def wait_finished(self, timeout: float = 30.0) -> bool:
-        ok = self._done.wait(timeout)
-        if self.error is not None:
-            raise self.error
-        return ok
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
-        if self.error is not None:
-            raise self.error
-
-
-def read_sftp_stream(spark, spool_dir: str,
-                     max_files_per_trigger: int | None = None):
-    """File stream over an SftpSpooler's dir: file body = `value`, the
-    remote path rides the FILENAME hex-encoded -> `sftp_path` column,
-    decoded JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    pat = r"/\d{12}-([0-9a-f]*)-[0-9a-f]{32}\.msg$"
-    return df.withColumn(
-        "sftp_path",
-        F.decode(F.unhex(F.regexp_extract(F.input_file_name(), pat, 1)),
-                 "UTF-8"))
+    def close(self) -> None:
+        self._client.close_session()
 
 
 # ---------------------------------------------------------------------------

@@ -29,9 +29,9 @@ from __future__ import annotations
 import json
 import threading
 import time
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import SpoolBridge
 
 _JSONDecoder = json.JSONDecoder()
 
@@ -300,14 +300,23 @@ class SpannerClient:
 
 
 @dataclass
-class SpannerCdcSpooler:
+class SpannerCdcSpooler(SpoolBridge):
     """`gcp_spanner_cdc` input: the reference's partition tree as driver
     threads — the root query (partition_token NULL) yields data changes
     and child-partition records; every child spawns its own reader, with
     token dedup so a partition announced by two parents reads once
-    (input_spanner_cdc.go trackPartition). One spool file per mod:
-    {"mod": <Mod.ToMap JSON>, commit_timestamp, mod_type, table_name,
-    server_transaction_id, record_sequence}."""
+    (input_spanner_cdc.go trackPartition). One spool file per mod: the
+    Mod.ToMap JSON, with the record's commit_timestamp, mod_type,
+    table_name, server_transaction_id and record_sequence as metadata."""
+
+    connector = "gcp_spanner_cdc"
+    META = (
+        ("gcp_spanner_commit_timestamp", "string"),
+        ("gcp_spanner_cdc_mod_type", "string"),
+        ("gcp_spanner_table_name", "string"),
+        ("gcp_spanner_cdc_server_transaction_id", "string"),
+        ("gcp_spanner_cdc_record_sequence", "string"),
+    )
 
     dsn: str
     stream_name: str
@@ -317,19 +326,13 @@ class SpannerCdcSpooler:
     heartbeat_ms: int = 3000
     endpoint: str = "https://spanner.googleapis.com"
     credentials: dict | None = None
-    error: str | None = None
     _client: SpannerClient | None = field(default=None, repr=False)
     _session: str = field(default="", repr=False)
-    _threads: list = field(default_factory=list, repr=False)
     _tokens: set = field(default_factory=set, repr=False)
-    _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event,
-                                   repr=False)
-    _counter: int = field(default=0, repr=False)
+    _tokens_lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
 
     def start(self) -> "SpannerCdcSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
+        self.open_spool()
         self._client = SpannerClient(self.dsn, endpoint=self.endpoint,
                                      credentials=self.credentials)
         self._session = self._client.create_session()
@@ -339,43 +342,16 @@ class SpannerCdcSpooler:
         if self.start_time is None:
             self.start_time = time.strftime("%Y-%m-%dT%H:%M:%SZ",
                                             time.gmtime())
-        self._spawn(None, self.start_time)
+        self.spawn(self._read_partition, None, self.start_time)
         return self
-
-    def _spawn(self, token: str | None, start_ts: str) -> None:
-        t = threading.Thread(target=self._read_partition,
-                             args=(token, start_ts), daemon=True)
-        with self._lock:
-            self._threads.append(t)
-        t.start()
 
     def _track(self, token: str) -> bool:
         """True when already tracked (skip), else records it."""
-        with self._lock:
+        with self._tokens_lock:
             if token in self._tokens:
                 return True
             self._tokens.add(token)
             return False
-
-    def _spool_mod(self, dc: dict, mod: dict) -> None:
-        out = {k: mod[k] for k in ("keys", "new_values", "old_values")
-               if mod.get(k) is not None}  # Mod.ToMap: only valid fields
-        env = {
-            "mod": json.dumps(out),
-            "commit_timestamp": dc.get("commit_timestamp"),
-            "mod_type": dc.get("mod_type"),
-            "table_name": dc.get("table_name"),
-            "server_transaction_id": dc.get("server_transaction_id"),
-            "record_sequence": dc.get("record_sequence"),
-        }
-        with self._lock:
-            self._counter += 1
-            n = self._counter
-        spool = Path(self.spool_dir)
-        name = f"{n:012d}-{uuid.uuid4().hex}.msg"
-        tmp = spool / f".{name}.tmp"
-        tmp.write_text(json.dumps(env))
-        tmp.rename(spool / name)
 
     def _read_partition(self, token: str | None, start_ts: str) -> None:
         sql = (f"SELECT ChangeRecord FROM READ_{self.stream_name} ("
@@ -398,58 +374,24 @@ class SpannerCdcSpooler:
             for rec in row[0] or []:
                 for dc in rec.get("data_change_record") or []:
                     for mod in dc.get("mods") or []:
-                        self._spool_mod(dc, mod)
+                        out = {k: mod[k] for k in ("keys", "new_values", "old_values")
+                               if mod.get(k) is not None}  # Mod.ToMap: only valid fields
+                        self.put(json.dumps(out), *(dc.get(k) for k in (
+                            "commit_timestamp", "mod_type", "table_name",
+                            "server_transaction_id", "record_sequence")))
+                self.sync()
                 for cp in rec.get("child_partitions_record") or []:
                     for child in cp.get("child_partitions") or []:
-                        if self._track(child["token"]):
-                            continue
-                        self._spawn(child["token"], cp["start_timestamp"])
+                        if not self._track(child["token"]):
+                            self.spawn(self._read_partition, child["token"],
+                                       cp["start_timestamp"])
 
-        try:
-            self._client.execute_streaming_sql(
-                self._session, sql, on_row, params=params,
-                param_types=types)
-        except (ConnectionError, OSError) as e:
-            if not self._stop.is_set():
-                import sys
+        self._client.execute_streaming_sql(
+            self._session, sql, on_row, params=params, param_types=types)
 
-                self.error = f"spanner cdc: {e}"
-                print(self.error, file=sys.stderr)
-
-    def stop(self) -> None:
-        self._stop.set()
+    def close(self) -> None:
         if self._client is not None:
             self._client.close()  # wakes readers blocked on the stream
-        with self._lock:
-            threads = list(self._threads)
-        for t in threads:
-            t.join(timeout=10)
-
-
-def read_spanner_cdc_stream(spark, spool_dir: str,
-                            max_files_per_trigger: int | None = None):
-    """File stream over a SpannerCdcSpooler's dir: `value` carries the
-    Mod.ToMap JSON, plus the reference's gcp_spanner_* metadata columns
-    (input_spanner_cdc.go:33-37), parsed JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    env = F.from_json(F.col("value"), (
-        "mod STRING, commit_timestamp STRING, mod_type STRING, "
-        "table_name STRING, server_transaction_id STRING, "
-        "record_sequence STRING"))
-    return df.select(
-        env["mod"].alias("value"),
-        env["commit_timestamp"].alias("gcp_spanner_commit_timestamp"),
-        env["mod_type"].alias("gcp_spanner_cdc_mod_type"),
-        env["table_name"].alias("gcp_spanner_table_name"),
-        env["server_transaction_id"]
-            .alias("gcp_spanner_cdc_server_transaction_id"),
-        env["record_sequence"].alias("gcp_spanner_cdc_record_sequence"),
-    )
 
 
 # ---------------------------------------------------------------------------

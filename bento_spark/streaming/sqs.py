@@ -20,7 +20,7 @@ Spark-first mapping (same spool-bridge rationale as every pull source):
   message as a durable spool file BEFORE DeleteMessage (ack-after-
   durability = at-least-once: an un-deleted message re-appears after its
   visibility timeout, the SQS contract). MessageId rides the spool
-  FILENAME and surfaces as `sqs_message_id`.
+  file's metadata and surfaces as `sqs_message_id`.
 - output -> foreachBatch SendMessageBatch in <=10-entry chunks (the API
   cap), bodies serialized JVM-side.
 
@@ -35,9 +35,9 @@ import hmac
 import json
 import threading
 import time
-import uuid
-from dataclasses import dataclass, field
-from pathlib import Path
+from dataclasses import dataclass
+
+from bento_spark.streaming.spool import SpoolBridge
 
 
 # --------------------------------------------------------------------------
@@ -214,12 +214,15 @@ class SqsClient:
 
 
 @dataclass
-class SqsSpooler:
+class SqsSpooler(SpoolBridge):
     """`aws_sqs` input (input_sqs.go): long-poll ReceiveMessage and spool
-    each message as one durable file; DeleteMessage fires only AFTER the
-    atomic rename — at-least-once (un-deleted messages re-appear after
+    each message as one durable file; DeleteMessage fires only once the
+    file is durable — at-least-once (un-deleted messages re-appear after
     the visibility timeout). `delete_message: false` (the reference's
     leave-in-queue mode) skips the ack."""
+
+    connector = "aws_sqs"
+    META = (("sqs_message_id", "string"),)
 
     endpoint: str
     queue_url: str
@@ -230,86 +233,36 @@ class SqsSpooler:
     wait_time_s: int = 1
     max_messages: int = 10
     delete_message: bool = True
-    error: str | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "SqsSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        client = SqsClient(self.endpoint, self.access_key, self.secret_key,
-                           region=self.region)
-        seq = {"n": 0}
+    def connect(self) -> None:
+        self._client = SqsClient(self.endpoint, self.access_key, self.secret_key,
+                                 region=self.region)
         # leave-in-queue mode only: remember spooled ids so re-visible
         # messages don't duplicate; delete_message mode never consults it
         # (tracking there would be an unbounded leak for zero benefit)
-        seen: set[str] | None = None if self.delete_message else set()
+        self._seen: set[str] | None = None if self.delete_message else set()
 
-        def run() -> None:
-            import sys
-
-            while not self._stop.is_set():
-                try:
-                    msgs = client.receive_message(
-                        self.queue_url, max_messages=self.max_messages,
-                        wait_time_s=self.wait_time_s)
-                except (ConnectionError, OSError):
-                    if self._stop.wait(0.5):
-                        return
+    def poll(self):
+        msgs = self.request(self._client.receive_message, self.queue_url,
+                            max_messages=self.max_messages, wait_time_s=self.wait_time_s)
+        if msgs is None:
+            return
+        if not msgs:
+            self.idle(0.05)
+        for m in msgs:
+            mid = m.get("MessageId", "")
+            if self._seen is not None:
+                if mid in self._seen:
                     continue
-                if not msgs:
-                    self._stop.wait(0.05)
-                    continue
-                try:
-                    for m in msgs:
-                        mid = m.get("MessageId", "")
-                        if seen is not None:
-                            if mid in seen:
-                                continue
-                            seen.add(mid)
-                        seq["n"] += 1
-                        # message id rides the filename hex-encoded (ids
-                        # are service-defined strings, not filename-safe)
-                        name = (f"{seq['n']:012d}-{mid.encode().hex()}"
-                                f"-{uuid.uuid4().hex}.msg")
-                        tmp = spool / f".{name}.tmp"
-                        tmp.write_bytes(m.get("Body", "").encode("utf-8"))
-                        tmp.rename(spool / name)
-                        if self.delete_message:
-                            try:
-                                client.delete_message(self.queue_url,
-                                                      m["ReceiptHandle"])
-                            except (ConnectionError, OSError, KeyError):
-                                pass  # visibility timeout re-delivers
-                except Exception as e:  # disk/decode faults: surface, don't vanish
-                    self.error = f"aws_sqs: {e}"
-                    print(self.error, file=sys.stderr)
-                    return
+                self._seen.add(mid)
+            yield m.get("ReceiptHandle"), m.get("Body", ""), mid or None
 
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_sqs_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over an SqsSpooler's dir: `value string` +
-    `sqs_message_id` decoded from the filename JVM-side."""
-    from pyspark.sql import functions as F
-
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    df = read_spool_stream(spark, spool_dir, whole_body=True,
-                           max_files_per_trigger=max_files_per_trigger)
-    fname = F.input_file_name()
-    pat = r"/\d{12}-([0-9a-f]*)-[0-9a-f]{32}\.msg$"
-    mid = F.decode(F.unhex(F.regexp_extract(fname, pat, 1)), "UTF-8")
-    return df.withColumn("sqs_message_id", F.when(mid != "", mid))
+    def ack(self, tokens: list) -> None:
+        for receipt in tokens if self.delete_message else ():
+            try:
+                self._client.delete_message(self.queue_url, receipt)
+            except ConnectionError:
+                pass  # the visibility timeout re-delivers
 
 
 # --------------------------------------------------------------------------

@@ -22,15 +22,15 @@ from __future__ import annotations
 import subprocess
 import sys
 import threading
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
 
 from pyspark.sql import functions as F
 
+from bento_spark.streaming.spool import SpoolBridge
+
 
 @dataclass
-class SubprocessSpooler:
+class SubprocessSpooler(SpoolBridge):
     """`subprocess` input: execute `name args...`, spool each stdout
     line as one message file. The command runs once and the input
     closes down when it terminates, unless restart_on_exit re-executes
@@ -38,89 +38,59 @@ class SubprocessSpooler:
     max_buffer fails the input loudly (bufio.Scanner's token-too-long
     contract)."""
 
+    connector = "subprocess"
+
     name: str
     args: list[str] = field(default_factory=list)
     spool_dir: str = ""
     restart_on_exit: bool = False
     max_buffer: int = 65536
-    error: str | None = None
-    finished: bool = False
     restarts: int = 0
     _proc: subprocess.Popen | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event,
-                                   repr=False)
 
-    def start(self) -> "SubprocessSpooler":
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
-        counter = {"n": 0}
+    @property
+    def finite(self) -> bool:
+        return not self.restart_on_exit
 
-        def spool_one(line: bytes) -> None:
-            counter["n"] += 1
-            name = f"{counter['n']:012d}-{uuid.uuid4().hex}.msg"
-            tmp = spool / f".{name}.tmp"
-            tmp.write_bytes(line)
-            tmp.rename(spool / name)
+    def _pump_stderr(self, proc: subprocess.Popen) -> None:
+        # input_subprocess.go logs subprocess stderr lines
+        for raw in proc.stderr:
+            print(f"subprocess input [{self.name}] stderr: "
+                  f"{raw.decode('utf-8', 'replace').rstrip()}", file=sys.stderr)
 
-        def pump_stderr(proc: subprocess.Popen) -> None:
-            # input_subprocess.go logs subprocess stderr lines
-            for raw in proc.stderr:
-                print(f"subprocess input [{self.name}] stderr: "
-                      f"{raw.decode('utf-8', 'replace').rstrip()}",
-                      file=sys.stderr)
+    def poll(self):
+        if self._proc is None:
+            self._proc = subprocess.Popen(
+                [self.name, *self.args], stdout=subprocess.PIPE,
+                stderr=subprocess.PIPE, stdin=subprocess.DEVNULL)
+            self._stderr = threading.Thread(target=self._pump_stderr,
+                                            args=(self._proc,), daemon=True)
+            self._stderr.start()
+        line = self._proc.stdout.readline(self.max_buffer + 1)
+        if len(line) > self.max_buffer:
+            self._proc.kill()
+            self._proc.wait()
+            raise ValueError(f"line exceeds max_buffer ({self.max_buffer} bytes)")
+        if line:
+            yield None, line.rstrip(b"\r\n")
+            return
+        self._proc.wait()
+        self._stderr.join(timeout=5)
+        if not self.restart_on_exit:
+            self.finish()
+        elif not self.stopping:
+            self.restarts += 1
+            self._proc = None
 
-        def run() -> None:
-            while not self._stop.is_set():
-                try:
-                    proc = subprocess.Popen(
-                        [self.name, *self.args],
-                        stdout=subprocess.PIPE, stderr=subprocess.PIPE,
-                        stdin=subprocess.DEVNULL)
-                except OSError as e:
-                    self.error = f"subprocess input: {e}"
-                    self.finished = True
-                    return
-                self._proc = proc
-                et = threading.Thread(target=pump_stderr, args=(proc,),
-                                      daemon=True)
-                et.start()
-                while not self._stop.is_set():
-                    line = proc.stdout.readline(self.max_buffer + 1)
-                    if not line:
-                        break
-                    if len(line) > self.max_buffer:
-                        self.error = (
-                            f"subprocess input: line exceeds max_buffer "
-                            f"({self.max_buffer} bytes)")
-                        proc.kill()
-                        proc.wait()
-                        self.finished = True
-                        return
-                    spool_one(line.rstrip(b"\r\n"))
-                proc.wait()
-                et.join(timeout=5)
-                if not self.restart_on_exit or self._stop.is_set():
-                    break
-                self.restarts += 1
-            self.finished = True
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        if self._proc is not None and self._proc.poll() is None:
-            self._proc.terminate()
+    def close(self) -> None:
+        proc = self._proc
+        if proc is not None and proc.poll() is None:
+            proc.terminate()
             try:
-                self._proc.wait(timeout=5)
+                proc.wait(timeout=5)
             except subprocess.TimeoutExpired:
-                self._proc.kill()
-                self._proc.wait()
-        if self._thread is not None:
-            self._thread.join(timeout=10)
-            self._thread = None
+                proc.kill()
+                proc.wait()
 
 
 def subprocess_sink(name: str, args: list[str] | None = None,

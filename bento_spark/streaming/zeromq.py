@@ -35,9 +35,9 @@ from __future__ import annotations
 import socket
 import struct
 import threading
-import uuid
 from dataclasses import dataclass, field
-from pathlib import Path
+
+from bento_spark.streaming.spool import SpoolBridge
 
 _GREETING_SIG = b"\xff" + b"\x00" * 8 + b"\x7f"
 _FLAG_MORE, _FLAG_LONG, _FLAG_COMMAND = 0x01, 0x02, 0x04
@@ -333,11 +333,13 @@ class ZmqSocket:
 
 
 @dataclass
-class ZmqSpooler:
+class ZmqSpooler(SpoolBridge):
     """`zmq4` input (input_zmq4.go): PULL or SUB per `socket_type`,
     `bind` or connect per the flag, `sub_filters` applied at subscribe
     time; each message spools as one durable file (at-most-once once
     delivered, the zmq4 contract — there are no acks in the protocol)."""
+
+    connector = "zmq4"
 
     socket_type: str  # PULL | SUB
     spool_dir: str
@@ -345,14 +347,10 @@ class ZmqSpooler:
     bind: bool = False
     sub_filters: list[str] = field(default_factory=list)
     _sock: ZmqSocket | None = field(default=None, repr=False)
-    _thread: threading.Thread | None = field(default=None, repr=False)
-    _stop: threading.Event = field(default_factory=threading.Event, repr=False)
 
-    def start(self) -> "ZmqSpooler":
+    def connect(self) -> None:
         if self.socket_type not in ("PULL", "SUB"):
             raise ValueError("zmq input socket_type must be PULL or SUB")
-        spool = Path(self.spool_dir)
-        spool.mkdir(parents=True, exist_ok=True)
         sock = ZmqSocket(self.socket_type,
                          [f.encode("utf-8") for f in self.sub_filters])
         if self.bind:
@@ -362,45 +360,21 @@ class ZmqSpooler:
             for u in self.urls:
                 sock.connect(*parse_zmq_url(u))
         self._sock = sock
-        seq = {"n": 0}
 
-        def run() -> None:
-            while not self._stop.is_set():
-                frames = sock.recv(timeout=0.2)
-                if frames is None:
-                    continue
-                seq["n"] += 1
-                name = f"{seq['n']:012d}-{uuid.uuid4().hex}.msg"
-                tmp = spool / f".{name}.tmp"
-                # multi-frame messages concatenate like the reference's
-                # part-per-frame batch collapsed to one payload
-                tmp.write_bytes(b"".join(frames))
-                tmp.rename(spool / name)
-
-        self._thread = threading.Thread(target=run, daemon=True)
-        self._thread.start()
-        return self
+    def poll(self):
+        frames = self._sock.recv(timeout=0.2)
+        if frames is not None:
+            # multi-frame messages concatenate like the reference's
+            # part-per-frame batch collapsed to one payload
+            yield None, b"".join(frames)
 
     @property
     def port(self) -> int | None:
         return self._sock.port if self._sock else None
 
-    def stop(self) -> None:
-        self._stop.set()
+    def close(self) -> None:
         if self._sock is not None:
             self._sock.close()
-            self._sock = None
-        if self._thread is not None:
-            self._thread.join(timeout=5)
-            self._thread = None
-
-
-def read_zmq_stream(spark, spool_dir: str, max_files_per_trigger: int | None = None):
-    """File stream over a ZmqSpooler's dir: `value string`."""
-    from bento_spark.streaming.http_server import read_spool_stream
-
-    return read_spool_stream(spark, spool_dir, whole_body=True,
-                             max_files_per_trigger=max_files_per_trigger)
 
 
 # --------------------------------------------------------------------------

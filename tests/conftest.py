@@ -14,7 +14,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="bento-spark-tests", master="local[8]", shuffle_partitions=8)
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8
+    s = get_spark(app_name="bento-spark-tests", master=f"local[{cores}]", shuffle_partitions=8)
     yield s
 
 

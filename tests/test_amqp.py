@@ -157,9 +157,9 @@ def test_spooler_acks_after_spool(broker, tmp_path):
         sp.stop()
         pub.close()
     files = sorted(spool.glob("*.msg"))
-    assert [f.read_bytes() for f in files] == [b"one", b"two"]
-    # routing key rides the filename (hex segment)
-    assert all(bytes.fromhex(f.name.split("-")[1]) == b"evt" for f in files)
+    # flag byte, the routing key as a JSON line, then the body
+    assert [f.read_bytes() for f in files] == [
+        b'v{"amqp_key": "evt"}\n' + body for body in (b"one", b"two")]
     # everything spooled was acked — broker holds no pending redelivery
     with broker._lock:
         assert all(not c["unacked"] for c in broker._consumers)
@@ -191,7 +191,7 @@ output:
 """)
     pub = AmqpClient(broker.host, broker.port)
     pub.exchange_declare("metrics", "topic")
-    sp = p.start_amqp_consumer()
+    sp = p.start_input()
     try:
         pub.publish("metrics", "host.a", b"warm")
         pub.publish("metrics", "host.b", b"cold")

@@ -23,8 +23,8 @@ from bento_spark.streaming.amqp1 import (
     decode_value,
     enc_value,
     parse_amqp1_url,
-    read_amqp1_stream,
 )
+from bento_spark.streaming.spool import read_spool
 
 
 @pytest.fixture()
@@ -145,7 +145,7 @@ def test_spooler_end_to_end(broker, spark, tmp_path):
                 break
             time.sleep(0.05)
         assert sp.error is None
-        df = read_amqp1_stream(spark, spool)
+        df = read_spool(spark, spool, Amqp1Spooler.META)
         q = (df.writeStream.format("memory").queryName("amqp1_e2e")
              .trigger(availableNow=True).start())
         q.awaitTermination(60)
@@ -205,7 +205,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_amqp1_consumer()
+    sp = p.start_input()
     try:
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline:

@@ -16,10 +16,10 @@ from bento_spark.streaming.azure_blob import (
     AzureBlobSpooler,
     BlobNotFoundError,
     MiniAzureBlobServer,
-    read_azure_blob_stream,
     shared_key_signature,
     shared_key_string_to_sign,
 )
+from bento_spark.streaming.spool import read_spool
 
 
 @pytest.fixture()
@@ -97,7 +97,7 @@ def test_listing_spooler_to_stream(server, spark, tmp_path):
         assert sp.wait_finished(20) and sp.error is None
     finally:
         sp.stop()
-    df = read_azure_blob_stream(spark, spool)
+    df = read_spool(spark, spool, AzureBlobSpooler.META)
     q = (df.writeStream.format("memory").queryName("azblob_e2e")
          .trigger(availableNow=True).start())
     q.awaitTermination(60)
@@ -158,7 +158,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_azure_blob_consumer()
+    sp = p.start_input()
     try:
         assert sp.wait_finished(20)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt"))

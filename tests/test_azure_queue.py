@@ -15,8 +15,8 @@ from bento_spark.streaming.azure_queue import (
     AzureQueueClient,
     AzureQueueSpooler,
     MiniAzureQueueServer,
-    read_azure_queue_stream,
 )
+from bento_spark.streaming.spool import read_spool
 
 
 @pytest.fixture()
@@ -81,7 +81,7 @@ def test_spooler_to_stream(server, spark, tmp_path):
         assert sp.error is None
     finally:
         sp.stop()
-    df = read_azure_queue_stream(spark, spool)
+    df = read_spool(spark, spool, AzureQueueSpooler.META)
     q = (df.writeStream.format("memory").queryName("azq_e2e")
          .trigger(availableNow=True).start())
     q.awaitTermination(60)
@@ -137,7 +137,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_azure_queue_consumer()
+    sp = p.start_input()
     try:
         deadline = time.monotonic() + 10
         while time.monotonic() < deadline:

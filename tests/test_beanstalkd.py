@@ -92,7 +92,7 @@ def test_spooler_acks_after_durability(server, tmp_path):
         while time.monotonic() < deadline and len(list(spool.glob("*.msg"))) < 5:
             time.sleep(0.05)
         files = sorted(spool.glob("*.msg"))
-        assert [f.read_bytes() for f in files] == [f"j{i}".encode() for i in range(5)]
+        assert [f.read_bytes() for f in files] == [f"vj{i}".encode() for i in range(5)]
         # all jobs deleted from the tube after spooling
         assert pub.reserve(0) is None
     finally:
@@ -131,7 +131,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p_in.start_beanstalkd_consumer()
+    sp = p_in.start_input()
     try:
         deadline = time.monotonic() + 10
         while len(list(spool.glob("*.msg"))) < 3:

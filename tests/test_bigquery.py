@@ -77,7 +77,7 @@ def test_spooler_one_row_per_message(server, tmp_path):
         where="site = ?", args=["bergen"]).start()
     assert sp.wait_finished(30)
     sp.stop()
-    rows = sorted(json.loads(f.read_text())["name"]
+    rows = sorted(json.loads(f.read_text()[1:])["name"]
                   for f in spool.glob("*.msg"))
     assert rows == ["cyd", "eli", "gus", "ivy"]
 
@@ -106,7 +106,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_bigquery_consumer()
+    sp = p.start_input()
     try:
         assert sp.wait_finished(30)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))

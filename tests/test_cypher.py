@@ -83,7 +83,7 @@ def test_spooler(server, tmp_path):
         spool_dir=str(spool), user="neo4j", password="pw").start()
     assert sp.wait_finished(30)
     sp.stop()
-    rows = sorted(json.loads(f.read_text())["name"]
+    rows = sorted(json.loads(f.read_text()[1:])["name"]
                   for f in spool.glob("*.msg"))
     assert rows == ["ada", "bob"]
 
@@ -118,7 +118,7 @@ output:
       city: ${{! this.city }}
       pop: ${{! this.pop }}
 """)
-    sp = p.start_cypher_consumer()
+    sp = p.start_input()
     try:
         assert sp.wait_finished(30)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt"))

@@ -65,7 +65,7 @@ def test_spooler_cursor(server, tmp_path):
         time.sleep(0.3)  # would duplicate if the cursor were broken
     finally:
         sp.stop()
-    msgs = [json.loads(f.read_text())["content"]
+    msgs = [json.loads(f.read_text()[1:])["content"]
             for f in sorted(spool.glob("*.msg"))]
     assert msgs == ["first", "late0", "late1", "late2", "late3", "late4"]
 
@@ -92,7 +92,7 @@ output:
     channel_id: outbox
     bot_token: {server.bot_token}
 """)
-    sp = p.start_discord_consumer()
+    sp = p.start_input()
     try:
         deadline = time.monotonic() + 10
         while len(list(spool.glob("*.msg"))) < 2:

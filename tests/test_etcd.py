@@ -218,7 +218,7 @@ def test_watch_horizon_filters_and_delete(server, tmp_path):
 
     def events():
         return [e for f in sorted(spool.glob("*.msg"))
-                for e in json.loads(f.read_text())]
+                for e in json.loads(f.read_text()[1:])]
 
     while len(events()) < 2:
         assert time.monotonic() < deadline, sp.error
@@ -247,7 +247,7 @@ def test_watch_filter_put(server, tmp_path):
     time.sleep(0.3)
     sp.stop()
     evs = [e for f in sorted(spool.glob("*.msg"))
-           for e in json.loads(f.read_text())]
+           for e in json.loads(f.read_text()[1:])]
     assert [(e["key"], e["type"]) for e in evs] == [("k", "DELETE")]
 
 
@@ -272,13 +272,13 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_etcd_consumer()
+    sp = p.start_input()
     try:
         server.put("sensors/t1", "20.5")
         server.put("sensors/t2", "21.0")
         deadline = time.monotonic() + 10
         # both puts may coalesce into ONE WatchResponse -> count events
-        while sum(len(json.loads(f.read_text()))
+        while sum(len(json.loads(f.read_text()[1:]))
                   for f in spool.glob("*.msg")) < 2:
             assert time.monotonic() < deadline, sp.error
             time.sleep(0.05)

@@ -99,9 +99,10 @@ def test_spooler_delete_objects(server, tmp_path):
                     delete_objects=True).start()
     assert sp.wait_finished(30)
     sp.stop()
-    envs = sorted((json.loads(f.read_text()) for f in spool.glob("*.msg")),
-                  key=lambda e: e["key"])
-    assert [e["key"] for e in envs] == ["in/a.json", "in/b.json"]
+    # the object key rides the JSON line after the spool file's flag byte
+    keys = sorted(json.loads(f.read_text()[1:].partition("\n")[0])["gcs_key"]
+                  for f in spool.glob("*.msg"))
+    assert keys == ["in/a.json", "in/b.json"]
     assert sorted(server.buckets["b"]) == ["keep/c.json"]
 
 
@@ -130,7 +131,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_gcs_consumer()
+    sp = p.start_input()
     try:
         assert sp.wait_finished(30)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))

@@ -84,7 +84,9 @@ def test_spooler_one_listing_pass(srv, tmp_path):
     assert sp.finished
     msgs = sorted((tmp_path / "spool").glob("*.msg"))
     assert len(msgs) == 3
-    assert sorted(m.read_bytes()[1:] for m in msgs) == [b"body-0", b"body-1", b"body-2"]
+    # the body follows the flag byte and the metadata's JSON line
+    assert sorted(m.read_bytes().partition(b"\n")[2] for m in msgs) == [
+        b"body-0", b"body-1", b"body-2"]
 
 
 def test_spooler_surfaces_listing_error(tmp_path, srv):
@@ -137,7 +139,7 @@ pipeline:
 output:
   path: {tmp_path / "sink2"}
 """)
-    consumer = p2.start_hdfs_consumer()
+    consumer = p2.start_input()
     try:
         consumer.wait_finished(20)
         q2 = p2.run_stream(spark, checkpoint=str(tmp_path / "ck2"))

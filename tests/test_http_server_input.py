@@ -36,7 +36,7 @@ output:
   path: {tmp_path}/out
 """
     )
-    srv = p.start_http_listener()
+    srv = p.start_input()
     try:
         assert srv.url.endswith("/ingest")
         for body in (b"alpha", b"beta\nwith two lines", b"gamma"):
@@ -85,7 +85,7 @@ output:
   path: {tmp_path}/out3
 """
     p = compile_yaml(cfg)
-    srv = p.start_http_listener()
+    srv = p.start_input()
     try:
         assert _post(srv.host, srv.port, "/post", b"first") == 200
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ck3"))
@@ -144,7 +144,7 @@ output:
   dlq: {tmp_path}/ws_dlq
 """
     p = compile_yaml(cfg)
-    srv = p.start_http_listener()
+    srv = p.start_input()
     try:
         for body in (b"hello webhook", b"second event"):
             assert _post(srv.host, srv.port, "/ingest", body) == 200
@@ -177,7 +177,7 @@ output:
   path: {tmp_path}/sout
 """
     )
-    srv = p.start_socket_listener()
+    srv = p.start_input()
     try:
         host, port = srv.address
         for payload in (b"alpha\nbeta\n", b"gamma\n"):
@@ -250,7 +250,7 @@ output:
   path: {tmp_path}/pollout
 """
     )
-    poller = p.start_http_poller()
+    poller = p.start_input()
     try:
         import time
 
@@ -489,11 +489,11 @@ def test_websocket_masked_server_frame_fails_connection(tmp_path):
     ws = WebSocketSpooler(url=f"ws://127.0.0.1:{srv.port}/feed", spool_dir=str(spool)).start()
     try:
         deadline = time.monotonic() + 10
-        while time.monotonic() < deadline and (ws._thread and ws._thread.is_alive()):
+        while time.monotonic() < deadline and not ws.finished:
             time.sleep(0.1)
-        assert not (ws._thread and ws._thread.is_alive()), "reader kept running after violation"
+        assert ws.finished, "reader kept running after violation"
         msgs = [f.read_bytes() for f in sorted(spool.glob("*.msg"))]
-        assert msgs == [b"good-one"], msgs  # nothing after the violation spooled
+        assert msgs == [b"vgood-one"], msgs  # nothing after the violation spooled
     finally:
         ws.stop()
         srv.close()
@@ -564,7 +564,7 @@ def test_websocket_wss_tls_handshake(tmp_path):
             time.sleep(0.2)
         assert srv.received_open == (0x1, b"hello-tls")
         msgs = [f.read_bytes() for f in sorted(spool.glob("*.msg"))]
-        assert b"msg-one" in msgs and b"frag-mented" in msgs
+        assert b"vmsg-one" in msgs and b"vfrag-mented" in msgs
     finally:
         ws.stop()
         srv.close()
@@ -612,7 +612,7 @@ output:
   path: {tmp_path}/wsout
 """
     )
-    ws = p.start_websocket()
+    ws = p.start_input()
     try:
         deadline = time.monotonic() + 20
         while time.monotonic() < deadline:
@@ -659,7 +659,7 @@ output:
     content: body
 """
     )
-    srv = p.start_http_listener()
+    srv = p.start_input()
     results: dict[str, tuple[int, bytes]] = {}
 
     def rpc(name: str, payload: bytes) -> None:
@@ -708,7 +708,7 @@ output:
   sync_response: {{}}
 """
     )
-    srv = p.start_http_listener()
+    srv = p.start_input()
     try:
         # no query running -> the gateway answers 504 after sync_timeout
         assert _post(srv.host, srv.port, "/post", b"orphan") == 504

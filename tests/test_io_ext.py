@@ -42,7 +42,7 @@ def test_subprocess_input_lines(tmp_path):
         time.sleep(0.02)
     sp.stop()
     assert sp.error is None
-    msgs = sorted(f.read_text() for f in (tmp_path / "sp").glob("*.msg"))
+    msgs = sorted(f.read_text()[1:] for f in (tmp_path / "sp").glob("*.msg"))
     assert msgs == [f"line-{i}" for i in range(5)]
 
 
@@ -70,7 +70,7 @@ def test_subprocess_input_restart_on_exit(tmp_path):
         time.sleep(0.05)
     sp.stop()
     assert sp.restarts >= 2
-    assert all(f.read_text() == "tick"
+    assert all(f.read_text() == "vtick"
                for f in (tmp_path / "sp").glob("*.msg"))
 
 
@@ -103,7 +103,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_subprocess_consumer()
+    sp = p.start_input()
     try:
         deadline = time.monotonic() + 10
         while not sp.finished:

@@ -21,9 +21,9 @@ from bento_spark.streaming.kafka_wire import (
     encode_record_batch,
     murmur2,
     partition_for_key,
-    read_kafka_wire_stream,
     kafka_wire_sink,
 )
+from bento_spark.streaming.spool import read_spool
 
 
 # --------------------------------------------------------------------------
@@ -194,7 +194,7 @@ def test_spooler_end_to_end(broker, spark, tmp_path):
             if len(list(Path(spool).glob("*.msg"))) >= 6:
                 break
             time.sleep(0.05)
-        df = read_kafka_wire_stream(spark, spool)
+        df = read_spool(spark, spool, KafkaSpooler.META)
         q = (
             df.writeStream.format("memory").queryName("kafka_wire_e2e")
             .trigger(availableNow=True).start()
@@ -241,8 +241,10 @@ def test_spooler_restart_resumes_from_committed_offset(broker, tmp_path):
     sp2.stop()
     files = sorted(Path(spool).glob("*.msg"))
     assert len(files) == 2
-    # spool bodies carry the 1-byte pad (see KafkaSpooler)
-    assert [f.read_bytes() for f in files] == [b".one", b".two"]
+    # spool bodies carry the 1-byte value flag, then the text metadata as
+    # a JSON line (streaming/spool.py)
+    assert [f.read_bytes() for f in files] == [
+        b'v{"kafka_topic": "r", "kafka_key": null}\n' + body for body in (b"one", b"two")]
     p.close()
 
 
@@ -318,7 +320,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_kafka_franz_consumer()
+    sp = p.start_input()
     try:
         prod = KafkaWireClient("127.0.0.1", broker.port)
         prod.produce("metrics", 0, encode_record_batch(
@@ -397,7 +399,8 @@ def test_spooler_clamps_no_timestamp_sentinel(broker, tmp_path):
         while time.monotonic() < deadline and not list(spool.glob("*.msg")):
             time.sleep(0.05)
         files = list(spool.glob("*.msg"))
-        assert files and "-" + "0" * 20 + "-" in files[0].name  # ts clamped to 0
+        # name fields: seq-partition-offset-ts-uuid, hex text
+        assert files and files[0].name.split("-")[3] == b"0".hex()  # ts clamped to 0
     finally:
         sp.stop()
 
@@ -561,7 +564,7 @@ pipeline:
 output:
   path: {tmp_path}/out_sasl
 """)
-    sp = p.start_kafka_franz_consumer()
+    sp = p.start_input()
     try:
         prod = KafkaWireClient(sasl_broker.host, sasl_broker.port,
                                sasl={"mechanism": "PLAIN", "username": "ada",

@@ -93,9 +93,9 @@ def test_spooler_qos1_ack_after_spool(broker, tmp_path):
     finally:
         sp.stop()
     files = sorted(spool.glob("*.msg"))
-    assert [f.read_bytes() for f in files] == [b"m0", b"m1", b"m2", b"m3", b"m4"]
-    # topic is hex-embedded in the filename
-    assert files[0].name.split("-")[1] == "ev/0".encode().hex()
+    # flag byte, the topic as a JSON line, then the body
+    assert [f.read_bytes() for f in files] == [
+        b'v{"mqtt_topic": "ev/%d"}\nm%d' % (i % 2, i) for i in range(5)]
 
 
 def test_yaml_mqtt_input_end_to_end(spark, broker, tmp_path):
@@ -114,7 +114,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_mqtt_subscriber()
+    sp = p.start_input()
     try:
         pub = MqttClient(broker.host, broker.port)
         pub.publish("sensor/a", b"warm", qos=1)

@@ -99,9 +99,10 @@ def test_spooler_spools_with_subject(server, tmp_path):
     finally:
         sp.stop()
     files = sorted(spool.glob("*.msg"))
-    assert [f.read_bytes() for f in files] == [b"m0", b"m1", b"m2", b"m3", b"m4"]
-    # subject is hex-embedded in the filename
-    assert files[0].name.split("-")[1] == "ev.0".encode().hex()
+    # flag byte, the subjects as a JSON line, then the body
+    assert [f.read_bytes() for f in files] == [
+        b'v{"nats_subject": "ev.%d", "nats_reply_subject": null}\nm%d' % (i % 2, i)
+        for i in range(5)]
 
 
 def test_yaml_nats_input_end_to_end(spark, server, tmp_path):
@@ -120,7 +121,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_nats_subscriber()
+    sp = p.start_input()
     try:
         pub = NatsClient(server.host, server.port)
         pub.publish("sensor.a", b"warm")

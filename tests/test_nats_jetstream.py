@@ -70,7 +70,9 @@ def test_pull_consumer_spools_and_acks(server, tmp_path):
         time.sleep(0.2)  # let the acks land
     finally:
         sp.stop()
-    bodies = sorted(m.read_bytes()[1:] for m in (tmp_path / "spool").glob("*.msg"))
+    # the body follows the flag byte and the metadata's JSON line
+    bodies = sorted(m.read_bytes().partition(b"\n")[2]
+                    for m in (tmp_path / "spool").glob("*.msg"))
     assert bodies == [b"m0", b"m1", b"m2"]
     # all three acked server-side: nothing pending
     cons = server._js_consumers[("EV", "d1")]
@@ -214,7 +216,7 @@ pipeline:
 output:
   path: {tmp_path / "sink"}
 """)
-    sp = p_in.start_jetstream_consumer()
+    sp = p_in.start_input()
     try:
         deadline = time.monotonic() + 15
         while len(list((tmp_path / "spool").glob("*.msg"))) < 5:
@@ -324,7 +326,7 @@ pipeline:
 output:
   path: {tmp_path / "sink"}
 """)
-    sp = p_in.start_nats_os_consumer()
+    sp = p_in.start_input()
     try:
         deadline = time.monotonic() + 15
         while len(list((tmp_path / "spool").glob("*.msg"))) < 3:

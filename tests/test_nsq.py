@@ -129,9 +129,11 @@ def test_spooler_rdy_refresh_beyond_max_in_flight(server, tmp_path):
         while time.monotonic() < deadline and len(list(spool.glob("*.msg"))) < 7:
             time.sleep(0.05)
         files = sorted(spool.glob("*.msg"))
-        assert [f.read_bytes() for f in files] == [f"b{i}".encode() for i in range(7)]
-        # id + attempts + timestamp ride the filename
-        assert files[0].name.split("-")[2] == "00001"
+        # the body follows the flag byte and the id's JSON line
+        assert [f.read_bytes().partition(b"\n")[2] for f in files] == [
+            f"b{i}".encode() for i in range(7)]
+        # attempts + timestamp ride the filename (hex text)
+        assert files[0].name.split("-")[1] == b"1".hex()
     finally:
         sp.stop()
 
@@ -158,7 +160,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_nsq_consumer()
+    sp = p.start_input()
     try:
         pub = NsqClient(server.host, server.port)
         pub.pub("sensor", b"warm")

@@ -112,7 +112,9 @@ def test_spooler_acks_after_durability(server, tmp_path):
         while time.monotonic() < deadline and len(list(spool.glob("*.msg"))) < 4:
             time.sleep(0.05)
         files = sorted(spool.glob("*.msg"))
-        assert sorted(f.read_bytes() for f in files) == [b"j0", b"j1", b"j2", b"j3"]
+        # the body follows the flag byte and the message id's JSON line
+        assert sorted(f.read_bytes().partition(b"\n")[2] for f in files) == [
+            b"j0", b"j1", b"j2", b"j3"]
         assert server.subscription_size("sub-c") == 0
     finally:
         sp.stop()
@@ -138,7 +140,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p_in.start_pubsub_consumer()
+    sp = p_in.start_input()
     try:
         src = tmp_path / "src"
         src.mkdir()

@@ -245,7 +245,9 @@ def test_topics_pattern_discovery(broker, tmp_path):
             time.sleep(0.05)
     finally:
         sp.stop()
-    bodies = sorted(json.loads(f.read_text())["topic"].rsplit("/", 1)[1]
+    # the topic rides the JSON line after the spool file's flag byte
+    bodies = sorted(json.loads(f.read_text()[1:].partition("\n")[0])["pulsar_topic"]
+                    .rsplit("/", 1)[1]
                     for f in spool.glob("*.msg"))
     assert bodies == ["ev-a", "ev-b"]
 
@@ -276,7 +278,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_pulsar_subscriber()
+    sp = p.start_input()
     try:
         pc = PulsarClient(broker.host, broker.port)
         prod = Producer(pc, topic, name="prod-e2e")

@@ -167,7 +167,9 @@ def test_list_spooler(server, tmp_path):
     finally:
         sp.stop()
     files = sorted(spool.glob("*.msg"))
-    assert [f.read_bytes() for f in files] == [b"m0", b"m1", b"m2", b"m3"]
+    # flag byte, the key as a JSON line, then the body
+    assert [f.read_bytes() for f in files] == [
+        b'v{"redis_key": "jobs"}\n' + m for m in (b"m0", b"m1", b"m2", b"m3")]
 
 
 def test_pubsub_spooler_patterns(server, tmp_path):
@@ -187,9 +189,10 @@ def test_pubsub_spooler_patterns(server, tmp_path):
     finally:
         sp.stop()
     files = sorted(spool.glob("*.msg"))
-    assert [f.read_bytes() for f in files] == [b"one", b"two"]
-    # channel rides the filename
-    assert files[0].name.split("-")[1] == "ev.a".encode().hex()
+    # flag byte, the channel as a JSON line, then the body
+    assert [f.read_bytes().partition(b"\n")[2] for f in files] == [b"one", b"two"]
+    assert json.loads(files[0].read_bytes()[1:].partition(b"\n")[0]) == {
+        "redis_channel": "ev.a"}
 
 
 def test_streams_spooler_acks_after_spool(server, tmp_path):
@@ -213,10 +216,11 @@ def test_streams_spooler_acks_after_spool(server, tmp_path):
         sp.stop()
         c.close()
     files = sorted(spool.glob("*.msg"))
-    head, body = files[0].read_bytes().split(b"\n", 1)
-    env = json.loads(head)
-    assert body == b"m1" and env["stream"] == "s1"
-    assert env["meta"] == {"origin": "unit"}
+    # flag byte, the stream fields as a JSON line, then the body
+    header, _, body = files[0].read_bytes()[1:].partition(b"\n")
+    env = json.loads(header)
+    assert body == b"m1" and env["redis_stream"] == "s1"
+    assert env["redis_meta"] == {"origin": "unit"}
 
 
 def test_read_redis_scan_distributed(spark, server):
@@ -250,7 +254,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_redis_spooler()
+    sp = p.start_input()
     try:
         pub = RedisClient(server.host, server.port)
         deadline = time.monotonic() + 10
@@ -310,7 +314,7 @@ pipeline:
 output:
   path: {tmp_path}/out2
 """)
-    sp = p.start_redis_spooler()
+    sp = p.start_input()
     try:
         deadline = time.monotonic() + 10
         while len(list(spool.glob("*.msg"))) < 3:

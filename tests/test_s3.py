@@ -19,10 +19,9 @@ from bento_spark.streaming.s3 import (
     S3Spooler,
     _extract_paths,
     canonical_query,
-    read_s3_spool_batch,
-    read_s3_stream,
     sigv4_verify_request,
 )
+from bento_spark.streaming.spool import read_spool
 
 
 @pytest.fixture()
@@ -129,7 +128,7 @@ def test_listing_spooler_end_to_end(server, spark, tmp_path):
         assert sp.wait_finished(20) and sp.error is None
     finally:
         sp.stop()
-    df = read_s3_stream(spark, spool)
+    df = read_spool(spark, spool, S3Spooler.META)
     q = (df.writeStream.format("memory").queryName("s3_e2e")
          .trigger(availableNow=True).start())
     q.awaitTermination(60)
@@ -192,7 +191,10 @@ def test_sqs_notification_mode(server, tmp_path):
                 time.sleep(0.05)
             files = list((tmp_path / "sp").glob("*.msg"))
             assert len(files) == 1
-            assert files[0].read_bytes() == b'.{"ok": true}'  # 1-byte pad
+            # 1-byte value flag, the object's names as a JSON line, the body
+            head, _, body = files[0].read_bytes()[1:].partition(b"\n")
+            assert files[0].read_bytes()[:1] == b"v" and body == b'{"ok": true}'
+            assert json.loads(head)["s3_key"] == "evt/hello world.json"
             # notification acked after spool
             deadline = time.monotonic() + 5
             while time.monotonic() < deadline and sqs_srv.queue_size(q_url):
@@ -261,7 +263,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_s3_consumer()
+    sp = p.start_input()
     try:
         assert sp.wait_finished(20)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt"))
@@ -346,7 +348,7 @@ def test_read_s3_spool_batch_matches_stream(server, spark, tmp_path):
         assert sp.wait_finished(20)
     finally:
         sp.stop()
-    rows = read_s3_spool_batch(spark, str(tmp_path / "sp")).collect()
+    rows = read_spool(spark, str(tmp_path / "sp"), S3Spooler.META, streaming=False).collect()
     assert [(r.s3_bucket, r.s3_key, r.value) for r in rows] == [
         ("bkt", "b/one.txt", "payload")]
 

@@ -221,7 +221,7 @@ def test_spooler_one_pass_and_delete(server, tmp_path):
     assert sp.wait_finished(30)
     sp.stop()
     files = sorted(spool.glob("*.msg"))
-    assert [json.loads(f.read_bytes())["n"] for f in files] == [0, 1, 2]
+    assert [json.loads(f.read_bytes().partition(b"\n")[2])["n"] for f in files] == [0, 1, 2]
     # consumed files were deleted, the non-matching one remains
     assert sorted(p.name for p in (server.root_path / "inbox").iterdir()) \
         == ["skip.txt"]
@@ -246,7 +246,7 @@ def test_spooler_watcher_picks_up_new_files(server, tmp_path):
             time.sleep(0.05)
     finally:
         sp.stop()
-    got = sorted(json.loads(f.read_bytes())["v"] for f in spool.glob("*.msg"))
+    got = sorted(json.loads(f.read_bytes().partition(b"\n")[2])["v"] for f in spool.glob("*.msg"))
     assert got == ["first", "second"]
 
 
@@ -277,7 +277,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_sftp_consumer()
+    sp = p.start_input()
     try:
         assert sp.wait_finished(30)
         q = p.run_stream(spark, checkpoint=str(tmp_path / "ckpt_in"))
@@ -346,7 +346,7 @@ output:
   path: {tmp_path}/out
 """)
     with pytest.raises(ValueError, match="private_key_pass"):
-        p.start_sftp_consumer()
+        p.start_input()
 
 
 def test_lint_knows_sftp():

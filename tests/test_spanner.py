@@ -83,7 +83,13 @@ def _seed_tree(server):
 
 
 def _events(spool):
-    return [json.loads(f.read_text()) for f in sorted(spool.glob("*.msg"))]
+    # after the 1-byte flag: the record fields as one JSON line, then the mod
+    out = []
+    for f in sorted(spool.glob("*.msg")):
+        header, _, mod = f.read_text()[1:].partition("\n")
+        out.append({"mod": mod, **{k.removeprefix("gcp_spanner_").removeprefix("cdc_"): v
+                                   for k, v in json.loads(header).items()}})
+    return out
 
 
 def test_partition_tree_and_mods(server, tmp_path):
@@ -169,7 +175,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_spanner_cdc_consumer()
+    sp = p.start_input()
     try:
         deadline = time.monotonic() + 15
         while len(list(spool.glob("*.msg"))) < 4:

@@ -86,7 +86,9 @@ def test_spooler_acks_after_durability(server, tmp_path):
         while time.monotonic() < deadline and len(list(spool.glob("*.msg"))) < 4:
             time.sleep(0.05)
         files = sorted(spool.glob("*.msg"))
-        assert sorted(f.read_bytes() for f in files) == [b"j0", b"j1", b"j2", b"j3"]
+        # the body follows the flag byte and the message id's JSON line
+        assert sorted(f.read_bytes().partition(b"\n")[2] for f in files) == [
+            b"j0", b"j1", b"j2", b"j3"]
         assert server.queue_size(_Q) == 0  # all deleted after spooling
     finally:
         sp.stop()
@@ -132,7 +134,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p_in.start_sqs_consumer()
+    sp = p_in.start_input()
     try:
         deadline = time.monotonic() + 10
         while len(list(spool.glob("*.msg"))) < 3:

@@ -99,7 +99,7 @@ pipeline:
 output:
   path: {tmp_path}/out
 """)
-    sp = p.start_zmq_subscriber()
+    sp = p.start_input()
     try:
         push = ZmqSocket("PUSH").connect("127.0.0.1", sp.port)
         push.send([b"warm"])
@@ -168,7 +168,7 @@ def test_spooler_sub_filters(tmp_path):
         time.sleep(0.2)
         files = sorted(spool.glob("*.msg"))
         # topic frame + payload concatenate into the spooled body
-        assert [f.read_bytes() for f in files] == [b"keep.a1", b"keep.c3"]
+        assert [f.read_bytes() for f in files] == [b"vkeep.a1", b"vkeep.c3"]
     finally:
         sp.stop()
         pub.close()
