@@ -11,6 +11,7 @@ engine built on goroutines + channels; this engine declares logical plans
 and lets Catalyst/Tungsten pick physical strategy.
 """
 
+from bento_spark import zipcache  # noqa: F401  (installs the zip re-read rule in every process)
 from bento_spark.session import get_spark, stop_spark
 
 __version__ = "0.1.0"
